@@ -16,10 +16,8 @@ import graft.sources.IngestGate
   * 1×/10×/100× run here measures the slope with the decontamination
   * check ON.
   *
-  * A/B: `SPARK_GRAFT_CONTAM_SIDECAR=false` forces the corpus-scan
-  * contamination plan (two per-batch semi-joins of the doc_id-bucketed
-  * shingle table on `s` — scan + shuffle, the pre-sidecar shape);
-  * default serves it from the s-keyed inverted sidecar
+  * The gate's build writes the s-keyed inverted sidecar, so the
+  * contamination leg is served from it
   * ([[graft.queries.DedupQueries.contamDeltaFlagsCm]]).
   * `SPARK_GRAFT_DELTA_BOUND` caps the streamed delta so decade runs
   * keep the same batch grain against a 10×/100× corpus.
@@ -108,8 +106,7 @@ object GateIngestBench {
     require(verdicts == delta.length,
       s"verdict count $verdicts != delta size ${delta.length}")
 
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_CONTAM_SIDECAR", "true")
-    println(f"""{"metric":"gate_ingest_sec_per_batch","value":${batchSecs.sum / batchSecs.size}%.2f,"unit":"sec","docs":${delta.length},"verdicts":$verdicts,"n_contam":$contam,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"contam_sidecar":$sidecar,"steal_stream":$stealStream,"sf":${util.Json.quote(sfDir)}}""")
+    println(f"""{"metric":"gate_ingest_sec_per_batch","value":${batchSecs.sum / batchSecs.size}%.2f,"unit":"sec","docs":${delta.length},"verdicts":$verdicts,"n_contam":$contam,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"steal_stream":$stealStream,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -79,7 +79,7 @@ object GateProfile {
       s"${prefix}_mm", docs, cpus.toInt))
     val appAnn = timed(AnnIndexLayout.appendDeltaVectors(spark,
       s"${prefix}_ann", vecs, cpus.toInt))
-    // the split-table leg of IngestGate.appendDeltaRest, inlined
+    // the split-table leg of IngestGate.appendDelta, inlined
     val appSplit = timed {
       BucketedTables.appendBucketed(
         docs.select(col("doc_id"), DedupQueries.isTrainOf.as("is_train"))

@@ -106,13 +106,6 @@ object KMeans {
     *               group's points, all groups unioned in one frame.
     * @param seeds  (grp, cent_id: Long, cvec: Array[Double]) — initial
     *               centroids per group, k rows per group.
-    * @param rowHint caller-declared upper bound on `slices` rows, when
-    *                one is known by construction (the PQ training cap).
-    *                A hint above [[MaxDriverFitRows]] skips the driver
-    *                probe entirely — without it an over-gate input pays
-    *                the probe's bounded collect AND the distributed
-    *                fallback, executing the slice computation twice.
-    *                None preserves probe-then-fallback.
     * @return (grp, cent_id, cvec) trained centroids. A cluster that
     *         goes empty in a round keeps its previous centroid, so
     *         every group returns exactly its k seed ids (PQ composite
@@ -129,11 +122,9 @@ object KMeans {
     * broadcasts the (groups x k)-row codebook, never the corpus; the
     * argmin is a partial-aggregable min(struct) — no window, no
     * corpus-sized state. */
-  def fitGrouped(slices: DataFrame, seeds: DataFrame, iters: Int,
-      rowHint: Option[Long] = None): DataFrame = {
+  def fitGrouped(slices: DataFrame, seeds: DataFrame, iters: Int)
+      : DataFrame = {
     require(iters >= 0)
-    if (rowHint.exists(_ > MaxDriverFitRows))
-      return fitGroupedDistributed(slices, seeds, iters)
     // Bounded-sample fast path: PQ codebook training runs on a sample
     // bounded BY CONSTRUCTION (SimilarityQueries.pqTrainingInput caps
     // at ≤2000 vectors at any corpus size), yet each distributed round
@@ -189,8 +180,8 @@ object KMeans {
     * PQ SUBVECTOR WIDTH (4 doubles). The gate counts rows, not bytes —
     * 200k rows of 64-dim vectors collected as Rows would be well over
     * 100 MB of driver heap — so a caller with wider slices must pass a
-    * correspondingly smaller effective bound via `rowHint` (or rely on
-    * the distributed fallback). limit(gate+1)+length-check bounds what
+    * correspondingly smaller gate (or rely on the distributed
+    * fallback). limit(gate+1)+length-check bounds what
     * the driver can ever hold (the bounded-collect discipline); an
     * over-gate input returns None and the caller falls back to the
     * distributed loop. */

@@ -2162,9 +2162,10 @@ object DedupQueries {
       .select(col("source"), expr(s"cum_before div $CurateBin").as("seq_id"))
       .distinct()
       .agg(count(lit(1)).as("n_seq"))
-    // attrition stats: ONE union-by-stage aggregate over the (already
-    // materialized) stage frames, pivoted to a single row — the former
-    // shape ran 8 separate scalar aggregates and crossJoined their
+    // attrition stats: ONE union-by-stage aggregate over the stage
+    // frames (s3..s7 are checkpointed; base, s1 and s2 are lazy, so
+    // this union re-reads base for them), pivoted to a single row —
+    // the former shape ran 8 separate scalar aggregates and crossJoined their
     // broadcasts, paying ~9 extra scheduler/AQE stage round-trips per
     // run for the same 16 numbers. count/sum per stage are unchanged
     // (same rows, same int64 sums); a stage with zero survivors simply
@@ -2176,18 +2177,13 @@ object DedupQueries {
       .reduce(_ unionByName _)
       .groupBy(col("stage_i"))
       .agg(count(lit(1)).as("n"), sum(col("n_tokens")).as("t"))
+    val exprs = (0 to 7).flatMap(i => Seq(
+      coalesce(max(when(col("stage_i") === i, col("n"))), lit(0L))
+        .as(s"n$i"),
+      coalesce(max(when(col("stage_i") === i, col("t"))), lit(0L))
+        .as(s"t$i")))
     val all = perStage
-      .agg(
-        (0 to 7).flatMap(i => Seq(
-          coalesce(max(when(col("stage_i") === i, col("n"))), lit(0L))
-            .as(s"n$i"),
-          coalesce(max(when(col("stage_i") === i, col("t"))), lit(0L))
-            .as(s"t$i"))).head,
-        (0 to 7).flatMap(i => Seq(
-          coalesce(max(when(col("stage_i") === i, col("n"))), lit(0L))
-            .as(s"n$i"),
-          coalesce(max(when(col("stage_i") === i, col("t"))), lit(0L))
-            .as(s"t$i"))).tail: _*)
+      .agg(exprs.head, exprs.tail: _*)
       .crossJoin(broadcast(packed))
       // 1 row; eager-checkpoint so the 8 stage-row projections below
       // scan a tiny RDD instead of re-planning the union subtree 8x
@@ -2620,11 +2616,9 @@ object DedupQueries {
     // the delta's shingle-key footprint bounds BOTH corpus-side passes
     val nKeys = deltaCnt.count()
     val slice0 =
-      if (nKeys <= ScanPrune.maxPushdownIn(spark)) {
-        val ks = deltaCnt.select(col("s")).collect().map(_.getLong(0)).toSeq
-        ScanPrune.ensureInPushdown(spark, ks.length)
-        ScanPrune.inSet(cm, "s", ks)
-      } else cm.join(broadcast(deltaCnt.select(col("s"))), Seq("s"),
+      if (nKeys <= ScanPrune.maxPushdownIn(spark))
+        ScanPrune.pushedInSet(spark, cm, "s", deltaCnt.select(col("s")))
+      else cm.join(broadcast(deltaCnt.select(col("s"))), Seq("s"),
         "left_semi")
     // replay safety: a re-run after the append must not see the
     // delta's own filed copies (contamDeltaFlags' corpusSized contract)

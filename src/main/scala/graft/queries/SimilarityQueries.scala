@@ -2324,8 +2324,6 @@ object SimilarityQueries {
     * property WhitenSpec asserts on a planted anisotropic fixture; the
     * analytic-eigenvalue variant is only equivalent when the basis is
     * an exact fixed point, which a one-step power estimate is not).
-    * The full k-component operator generalization lives in
-    * [[graft.operators.PCA]].
     *
     * Scale: the basis is the same two fixed-point corpus passes as
     * emb_pca2 (broadcast-pivoted 1-row frames, never a collect); the
@@ -2641,11 +2639,11 @@ object SimilarityQueries {
     val seeds = xfSlices(xfProjection(spark, dir)
       .filter(col("vec_id") < 500 && col("vec_id") % 16 === 7))
       .select(col("grp"), col("vec_id").as("cent_id"), col("x").as("cvec"))
-    // rowHint: ≤2000 training vectors by construction (vec_id < 8000,
-    // %4 == 1) × 16 subspace slices = ≤32000 rows at any corpus size
+    // ≤2000 training vectors by construction (vec_id < 8000, %4 == 1)
+    // × 16 subspace slices = ≤32000 rows at any corpus size — always
+    // within fitGrouped's driver-side gate
     val trained = graft.operators.KMeans.fitGrouped(
-      pqTrainingInput(spark, dir), seeds, iters = 2,
-      rowHint = Some(32000L))
+      pqTrainingInput(spark, dir), seeds, iters = 2)
     // stitch: composite centroid j = concat of subspace codebooks' entry
     // j in subspace order (identical id sets per group by fitGrouped's
     // empty-cluster carry-forward); cast to float for the fused kernel

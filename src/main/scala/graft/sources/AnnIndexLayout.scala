@@ -59,49 +59,50 @@ object AnnIndexLayout {
     (BucketedTables.read(spark, s"${prefix}_coarse"),
       BucketedTables.read(spark, s"${prefix}_pqcb"))
 
-  /** Build the index over the vectors matching `where`: persist the
-    * geometry derived from that corpus, then one scan for the coarse
-    * assignment and one for the PQ encode — each the
-    * partial-aggregable shape from the online query — as bucketed
-    * tables under `prefix`. */
-  private val IndexTables =
-    Seq("coarse", "pqcb", "cells", "codes", "cellhist", "qref", "ids")
+  /** The live generation's physical prefix and its frozen geometry
+    * (coarse centroids, PQ codebook), with the vector kernels
+    * registered. Resolved ONCE per call: appends and rebuilds are both
+    * writers under the single-writer contract — a rebuild publishing
+    * mid-append would strand the delta in the superseded generation. */
+  private def liveIndex(spark: SparkSession,
+      prefix: String): (String, DataFrame, DataFrame) = {
+    graft.functions.VectorFunctions.ensureRegistered(spark)
+    val phys = livePrefix(spark, prefix)
+    val (cents, pqcb) = geometry(spark, phys)
+    (phys, cents, pqcb)
+  }
 
-  /** The generation POINTER — the shared [[GenerationPointer]]
-    * machinery (extracted from this layout): a 1-row view
-    * `<prefix>_livegen` naming the published generation number. Every
-    * reader resolves the seven index tables through it
-    * ([[livePrefix]]), and a rebuild publishes by flipping it with a
-    * single `CREATE OR REPLACE VIEW` — ONE atomic catalog operation
-    * for the whole seven-table set, so a reader always resolves one
-    * COMPLETE index generation: there is no moment at which any table
-    * is under neither name (the rename-loop swap this replaced had
-    * one). */
-  private def liveGen(spark: SparkSession, prefix: String): Option[Long] =
-    GenerationPointer.liveGen(spark, prefix)
+  private val Cells = DeltaIndex.Table("cells", "cell", "n_id")
+  private val Codes = DeltaIndex.Table("codes", "n_id", "n_id")
 
-  /** The PHYSICAL prefix of the live generation — the seven index
-    * tables are `<livePrefix>_coarse` … `<livePrefix>_ids`. Public so
-    * specs and operational tooling can reach the backing tables;
-    * everything else should go through [[serve]]/[[query]]. Loud when
-    * nothing is published: resolving a half-built generation is
-    * exactly what the pointer exists to prevent. */
+  /** One generation's table set: the geometry, the two delta tables,
+    * the audit references and the ledger. */
+  private val IndexTables = Seq("coarse", "pqcb", Cells.suffix,
+    Codes.suffix, "cellhist", "qref", "ids")
+
+  /** The PHYSICAL prefix of the live generation ([[GenerationPointer]])
+    * — the seven index tables are `<livePrefix>_coarse` …
+    * `<livePrefix>_ids`. Public so specs and operational tooling can
+    * reach the backing tables; everything else should go through
+    * [[serve]]/[[query]]. */
   def livePrefix(spark: SparkSession, prefix: String): String =
     GenerationPointer.livePrefix(spark, prefix)
 
-  /** Sweep stale generations ([[GenerationPointer.sweepStale]]) —
-    * keeps the live generation plus the `keepGenerations` most recent
-    * below it. Runs at the start of every [[build]] with the default
-    * guard (generation N−1 survives, protecting a deferred-drop
-    * deployment's in-flight readers); a deployment that deferred the
-    * post-publish drop ([[build]]'s `dropSuperseded = false`) calls
-    * this with `keepGenerations = 0` after its max query latency to
-    * reclaim the superseded generation — the runnable sequence is the
-    * deferred-drop recipe in [[GenerationPointer]]'s scaladoc. */
+  /** Sweep stale generations ([[GenerationPointer.sweepStale]]): keeps
+    * the live generation plus the `keepGenerations` most recent below
+    * it; `keepGenerations = 0` after the max query latency is the
+    * deferred-drop deployment's reclaim (the recipe in
+    * [[GenerationPointer]]'s scaladoc). */
   def sweepStaleGenerations(spark: SparkSession, prefix: String,
       keepGenerations: Int = 1): Unit =
     GenerationPointer.sweepStale(spark, prefix, keepGenerations)
 
+  /** Build the index over the vectors matching `where`: persist the
+    * geometry derived from that corpus, then one scan for the coarse
+    * assignment and one for the PQ encode — each the
+    * partial-aggregable shape from the online query — as bucketed
+    * tables under the next generation, published by the atomic pointer
+    * flip ([[GenerationPointer.rebuild]]). */
   def build(spark: SparkSession, dir: String, prefix: String,
       buckets: Int = 8, where: Column = lit(true),
       dropSuperseded: Boolean = true): Unit =
@@ -113,86 +114,61 @@ object AnnIndexLayout {
       prefix: String, buckets: Int, where: Column, dropSuperseded: Boolean,
       faultHook: String => Unit): Unit = {
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    // GENERATIONAL rebuild: every table of the new index is fully
-    // computed and written under the next generation's prefix FIRST —
-    // a crash anywhere in the expensive part leaves the live
-    // generation untouched and serving (the half-built one is swept by
-    // the next build) — then the publish flips the `_livegen` pointer
-    // view in ONE atomic catalog operation and only afterwards drops
-    // the superseded generation's tables. A crash before the flip
-    // serves the old generation complete; after it, the new one —
-    // never a mixed set, never a missing table.
-    val cur = liveGen(spark, prefix)
-    val (tp, nextGen) = GenerationPointer.nextPrefix(spark, prefix)
-    sweepStaleGenerations(spark, prefix)
-    SimilarityQueries.coarseCentsOf(spark, dir, where)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tp}_coarse")
-    SimilarityQueries.pqSeedCentsOf(spark, dir, where)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tp}_pqcb")
-    val (cents, pqcb) = geometry(spark, tp)
-    BucketedTables.writeBucketed(
-      SimilarityQueries.ivfAssignUsing(spark, dir, cents, where),
-      s"${tp}_cells", "cell", buckets)
-    BucketedTables.writeBucketed(
-      SimilarityQueries.pqCorpusCodesUsing(spark, dir, pqcb, where),
-      s"${tp}_codes", "n_id", buckets)
-    // the ingest ledger ([[IngestLedger]]): every built vector is
-    // fully filed by definition — deltas split fresh/dirty against
-    // this narrow id column instead of scanning the 16-wide codes
-    BucketedTables.writeBucketed(
-      spark.table(s"${tp}_cells").select(col("n_id").as("id")),
-      s"${tp}_ids", "id", buckets)
-    // build-time reference state for the staleness audit — captured
-    // HERE so "has the index rotted since its build" is a comparison,
-    // never a guess. A rebuild recaptures both (re-baselining is part
-    // of what a rebuild means).
-    //  - `_cellhist` (cell, n_build): the coarse occupancy histogram
-    //    of the just-written assignment (codebook-sized).
-    //  - `_qref` (avg_qerr, n_sample): mean PQ quantization error over
-    //    a deterministic 1-in-8 sample of the build vectors (rate
-    //    sample, so the reference pass costs 1/8 of an encode and the
-    //    audit can reproduce the exact sample).
-    spark.table(s"${tp}_cells")
-      .groupBy(col("cell"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_build"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tp}_cellhist")
-    SimilarityQueries.pqQuantError(
-        graft.util.Tables.load(spark, dir, "embeddings")
-          .filter(where && QrefSamplePred)
-          .select(col("vec_id"), col("embedding")), pqcb)
-      .agg(org.apache.spark.sql.functions.avg(col("qerr")).as("avg_qerr"),
-        org.apache.spark.sql.functions.count(lit(1)).as("n_sample"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tp}_qref")
-    // a degenerate reference makes every future audit meaningless (a
-    // NULL avg_qerr would read as "no rise" forever), so refuse to
-    // PUBLISH instead of letting the monitor silently go blind — the
-    // live index (if any) keeps serving: the 1-in-8 rate sample can be
-    // empty only for a corpus too small (or too filtered) to audit
-    val nSample = spark.table(s"${tp}_qref").head().getAs[Long]("n_sample")
-    require(nSample > 0L,
-      s"$prefix: the _qref build sample is empty (corpus too small or " +
-        "over-filtered for vec_id%8==1) — the staleness audit would " +
-        "silently report qerr_rise_ppm=0 forever; widen `where` or skip " +
-        "the audit for this index")
-    // publish: ONE atomic catalog operation — the pointer view flips
-    // to the new generation; every reader resolving after this sees
-    // all seven tables of the new index, every reader that resolved
-    // before it keeps the complete old set. The superseded
-    // generation's tables are dropped only AFTER the flip (a crash
-    // in between leaves them for the next build's sweep, costing
-    // bytes, never serving). Deployments with long-running concurrent
-    // queries can pass `dropSuperseded = false` and run
-    // [[sweepStaleGenerations]] after their max query latency, so an
-    // in-flight plan over the old generation never races its drop.
-    faultHook("before-publish")
-    GenerationPointer.publish(spark, prefix, nextGen)
-    faultHook("after-publish")
-    if (dropSuperseded) cur.foreach(g =>
-      GenerationPointer.dropGeneration(spark, prefix, g, IndexTables))
+    GenerationPointer.rebuild(spark, prefix, IndexTables, dropSuperseded,
+        dropLegacy = false, faultHook) { tp =>
+      SimilarityQueries.coarseCentsOf(spark, dir, where)
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(s"${tp}_coarse")
+      SimilarityQueries.pqSeedCentsOf(spark, dir, where)
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(s"${tp}_pqcb")
+      val (cents, pqcb) = geometry(spark, tp)
+      BucketedTables.writeBucketed(
+        SimilarityQueries.ivfAssignUsing(spark, dir, cents, where),
+        Cells.name(tp), Cells.key, buckets)
+      BucketedTables.writeBucketed(
+        SimilarityQueries.pqCorpusCodesUsing(spark, dir, pqcb, where),
+        Codes.name(tp), Codes.key, buckets)
+      // the ingest ledger ([[IngestLedger]]): every built vector is
+      // fully filed by definition — deltas split fresh/dirty against
+      // this narrow id column instead of scanning the 16-wide codes
+      IngestLedger.create(spark.table(Cells.name(tp)).select(col("n_id")),
+        tp, buckets)
+      // build-time reference state for the staleness audit — captured
+      // HERE so "has the index rotted since its build" is a comparison,
+      // never a guess. A rebuild recaptures both (re-baselining is part
+      // of what a rebuild means).
+      //  - `_cellhist` (cell, n_build): the coarse occupancy histogram
+      //    of the just-written assignment (codebook-sized).
+      //  - `_qref` (avg_qerr, n_sample): mean PQ quantization error over
+      //    a deterministic 1-in-8 sample of the build vectors (rate
+      //    sample, so the reference pass costs 1/8 of an encode and the
+      //    audit can reproduce the exact sample).
+      spark.table(Cells.name(tp))
+        .groupBy(col("cell"))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_build"))
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(s"${tp}_cellhist")
+      SimilarityQueries.pqQuantError(
+          graft.util.Tables.load(spark, dir, "embeddings")
+            .filter(where && QrefSamplePred)
+            .select(col("vec_id"), col("embedding")), pqcb)
+        .agg(org.apache.spark.sql.functions.avg(col("qerr")).as("avg_qerr"),
+          org.apache.spark.sql.functions.count(lit(1)).as("n_sample"))
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(s"${tp}_qref")
+      // a degenerate reference makes every future audit meaningless (a
+      // NULL avg_qerr would read as "no rise" forever), so refuse to
+      // PUBLISH instead of letting the monitor silently go blind — the
+      // live index (if any) keeps serving: the 1-in-8 rate sample can
+      // be empty only for a corpus too small (or too filtered) to audit
+      val nSample = spark.table(s"${tp}_qref").head().getAs[Long]("n_sample")
+      require(nSample > 0L,
+        s"$prefix: the _qref build sample is empty (corpus too small or " +
+          "over-filtered for vec_id%8==1) — the staleness audit would " +
+          "silently report qerr_rise_ppm=0 forever; widen `where` or skip " +
+          "the audit for this index")
+    }
   }
 
   /** The deterministic 1-in-8 rate sample the `_qref` reference is
@@ -201,8 +177,8 @@ object AnnIndexLayout {
   val QrefSamplePred: Column =
     org.apache.spark.sql.functions.pmod(col("vec_id"), lit(8L)) === 1L
 
-  /** GEOMETRY staleness audit — the `TextIndexLayout.stalenessMetrics`
-    * contract for the vector index: the frozen coarse centroids + PQ
+  /** GEOMETRY staleness audit for the vector index: the frozen coarse
+    * centroids + PQ
     * codebook stay internally consistent as deltas stream in, but as
     * the corpus distribution shifts they file new vectors into
     * increasingly wrong cells and reconstruct them increasingly badly
@@ -233,11 +209,8 @@ object AnnIndexLayout {
       recentVecs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val phys = livePrefix(spark, prefix)
-    val (_, pqcb) = geometry(spark, phys)
-    val nowHist = Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${phys}_cells"), "n_id")
+    val (phys, _, pqcb) = liveIndex(spark, prefix)
+    val nowHist = DeltaIndex.live(spark, prefix, phys, Cells)
       .groupBy(col("cell")).agg(count(lit(1)).as("n_now"))
     val hist = spark.table(s"${phys}_cellhist")
       .join(nowHist, Seq("cell"), "full_outer")
@@ -322,41 +295,16 @@ object AnnIndexLayout {
     * over the same data (StreamDeltaIndexSpec). */
   def appendDeltaVectors(spark: SparkSession, prefix: String,
       vecs0: DataFrame, buckets: Int = 8): Unit = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    // resolved ONCE per delta: appends and rebuilds are both writers
-    // under the layouts' single-writer contract — a rebuild publishing
-    // mid-append would strand this delta in the superseded generation
-    val phys = livePrefix(spark, prefix)
+    val (phys, cents, pqcb) = liveIndex(spark, prefix)
     // the idempotence machinery dedups only against PERSISTED rows; a
     // batch carrying the same vec_id twice would file it twice
     val vecs = vecs0.dropDuplicates("vec_id")
-    val split = IngestLedger.begin(spark, phys,
-      vecs.select(col("vec_id")), buckets,
-      BucketedTables.read(spark, s"${phys}_cells").select(col("n_id")))
-    val (cents, pqcb) = geometry(spark, phys)
-    BucketedTables.appendBucketed(
-      IngestLedger.filed(
-        SimilarityQueries.ivfAssignWith(cents,
+    DeltaIndex.appendLedgered(spark, phys, vecs.select(col("vec_id")),
+      buckets, Seq(
+        Cells -> SimilarityQueries.ivfAssignWith(cents,
           SimilarityQueries.normedVectors(vecs)),
-        "n_id", split,
-        BucketedTables.read(spark, s"${phys}_cells")
-          .select(col("n_id"))),
-      s"${phys}_cells", "cell", buckets)
-    BucketedTables.appendBucketed(
-      IngestLedger.filed(
-        SimilarityQueries.pqEncode(
-          vecs.select(col("vec_id"), col("embedding")), pqcb),
-        "n_id", split,
-        BucketedTables.read(spark, s"${phys}_codes")
-          .select(col("n_id")).distinct()),
-      s"${phys}_codes", "n_id", buckets)
-    // the write commits through the FRAME's session — inside
-    // foreachBatch that is the micro-batch CLONE, whose table refresh
-    // does not invalidate this (the serving) session's cached file
-    // listing; without this refresh the serve path would keep reading
-    // the pre-delta index until some unrelated refresh
-    spark.catalog.refreshTable(s"${phys}_cells")
-    spark.catalog.refreshTable(s"${phys}_codes")
+        Codes -> SimilarityQueries.pqEncode(
+          vecs.select(col("vec_id"), col("embedding")), pqcb)))
   }
 
   /** CONTINUOUS index maintenance: a stream of (vec_id, embedding)
@@ -373,34 +321,11 @@ object AnnIndexLayout {
       vectorStream: DataFrame, buckets: Int = 8,
       checkpoint: Option[String] = None,
       monitor: Option[graft.streaming.AnnStalenessMonitor] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vectorStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, _: Long) =>
-        appendDeltaVectors(spark, prefix, batch, buckets)
-        // the audit tick exactly where a metrics scrape would sit:
-        // after each filed delta, with THAT delta as the freshness
-        // probe, on the monitor's real-ms clock (sustainMs keeps its
-        // unit). Monitoring must never take down the data path it
-        // observes: the delta is already filed, so an audit failure
-        // (reference tables mid-rebuild, transient read error) is
-        // reported and swallowed — the next batch's tick retries.
-        // NOTE the monitor is process-local state: a restarted query
-        // starts with a cleared alert and sustain window; a deployment
-        // exports [[graft.streaming.AnnStalenessMonitor.transitions]]
-        // to its metrics system for durability.
-        monitor.foreach { m =>
-          try m.check(spark, prefix, batch,
-            atMs = System.currentTimeMillis())
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[ann-staleness] audit tick failed (ingest unaffected): $e")
-          }
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(vectorStream, checkpoint) { (batch, _) =>
+      appendDeltaVectors(spark, prefix, batch, buckets)
+      DeltaIndex.auditTick(spark, monitor, prefix, batch)
+    }
 
   /** Maintenance pass for a delta-accumulating index: every
     * [[appendDelta]] adds one file set per bucket, so after N deltas
@@ -412,31 +337,20 @@ object AnnIndexLayout {
     * against the compacted table. Same-JVM delta writers are quiesced
     * by the per-table lock ([[BucketedTables]] header); cross-JVM
     * writers are outside the single-writer contract. */
-  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit = {
-    val phys = livePrefix(spark, prefix)
-    BucketedTables.compact(spark, s"${phys}_cells", "cell", buckets,
-      df => Tombstones.filter(spark, prefix, df, "n_id"))
-    BucketedTables.compact(spark, s"${phys}_codes", "n_id", buckets,
-      df => Tombstones.filter(spark, prefix, df, "n_id"))
-    // the ledger lives at the GENERATION grain; the tombstones at the
-    // logical prefix (they must keep filtering across rebuilds)
-    IngestLedger.compact(spark, phys, buckets, tombstonePrefix = prefix)
-    Tombstones.clear(spark, prefix)
-  }
+  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, livePrefix(spark, prefix),
+      Seq(Cells, Codes), buckets)
 
   /** Serve the registered query set from the persisted index: must
     * equal `ann_ivfpq_topk` row-for-row without re-encoding the
     * corpus (self-exclusion on, as the online query's corpus-member
     * queries imply). */
   def query(spark: SparkSession, dir: String, prefix: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val phys = livePrefix(spark, prefix)
-    val (cents, pqcb) = geometry(spark, phys)
+    val (phys, cents, pqcb) = liveIndex(spark, prefix)
     SimilarityQueries.ivfpqServeQueriesWith(spark, dir,
       SimilarityQueries.registeredQueryFrame(spark, dir), cents, pqcb,
-      Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${phys}_cells"), "n_id"),
-      BucketedTables.read(spark, s"${phys}_codes"),
+      DeltaIndex.live(spark, prefix, phys, Cells),
+      BucketedTables.read(spark, Codes.name(phys)),
       excludeSelf = true)
   }
 
@@ -462,15 +376,12 @@ object AnnIndexLayout {
     * members (re-querying the index for its own vectors). */
   def serve(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame, excludeSelf: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    val (phys, cents, pqcb) = liveIndex(spark, prefix)
     val q = queries.select(col("vec_id"), col("embedding"),
       sqrt(expr("graft_norm2(embedding)")).as("nrm"))
-    val phys = livePrefix(spark, prefix)
-    val (cents, pqcb) = geometry(spark, phys)
     SimilarityQueries.ivfpqServeQueriesWith(spark, dir, q, cents, pqcb,
-      Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${phys}_cells"), "n_id"),
-      BucketedTables.read(spark, s"${phys}_codes"), excludeSelf,
+      DeltaIndex.live(spark, prefix, phys, Cells),
+      BucketedTables.read(spark, Codes.name(phys)), excludeSelf,
       // request-sized query batches: the exact re-rank's raw-vector
       // lookup must be shortlist-bounded, not a per-request
       // corpus-sized join ([[SimilarityQueries.pqServeQueries]]).
@@ -531,7 +442,7 @@ object AnnIndexLayout {
     * accounting rollup. */
   def semanticDedupDelta(spark: SparkSession, dir: String, prefix: String,
       newVecs: DataFrame, minCosine: Double): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+    val (phys, cents, pqcb) = liveIndex(spark, prefix)
     val delta = newVecs.dropDuplicates("vec_id")
     val dIds = delta.select(col("vec_id").as("__did")).localCheckpoint(true)
     // broadcast/pointLookup gate (see [[boundedBatch]]): a bulk
@@ -547,10 +458,7 @@ object AnnIndexLayout {
       col("embedding").as("qemb"))
     val c = graft.util.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("n_id"), col("embedding").as("nemb"))
-    val phys = livePrefix(spark, prefix)
-    val (cents, pqcb) = geometry(spark, phys)
-    val cells = Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${phys}_cells"), "n_id")
+    val cells = DeltaIndex.live(spark, prefix, phys, Cells)
       .join(hinted(dIds, bounded), col("n_id") === col("__did"), "left_anti")
     val qn = delta.select(col("vec_id"), col("embedding"),
       sqrt(expr("graft_norm2(embedding)")).as("nrm"))
@@ -562,7 +470,7 @@ object AnnIndexLayout {
     // 100× gate slope measured; pointLookup bounds the re-rank's
     // lookup inside the serve the same way)
     val served = SimilarityQueries.ivfpqServeQueriesWith(spark, dir, qn,
-        cents, pqcb, cells, BucketedTables.read(spark, s"${phys}_codes"),
+        cents, pqcb, cells, BucketedTables.read(spark, Codes.name(phys)),
         excludeSelf = false, pointLookup = bounded)
       .localCheckpoint(true)
     val cNeeded = c.join(
@@ -589,9 +497,7 @@ object AnnIndexLayout {
       queryStream: DataFrame, excludeSelf: Boolean = false)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(serve(spark, dir, prefix, batch, excludeSelf), batchId)
-      }
-      .start()
+    DeltaIndex.stream(queryStream) { (batch, batchId) =>
+      sink(serve(spark, dir, prefix, batch, excludeSelf), batchId)
+    }
 }

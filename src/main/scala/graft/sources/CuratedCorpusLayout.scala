@@ -85,6 +85,12 @@ import graft.util.Tables
   */
 object CuratedCorpusLayout {
 
+  private val Docs = DeltaIndex.Table("docs", "doc_id", "doc_id")
+  private val Base = DeltaIndex.Table("base", "doc_id", "doc_id")
+  private val Texts = DeltaIndex.Table("texts", "doc_id", "doc_id")
+  private val Vecs = DeltaIndex.Table("vecs", "vec_id", "vec_id")
+  private val CosBands = DeltaIndex.Table("cos_bands", "code", "vec_id")
+
   /** Sentinel for [[buildIncremental]]'s `cosPlanesPerBand`: size the
     * sign-LSH band width W from the corpus itself (the default). The
     * scale story used to end with "turn W up at ~100× this SF" — a
@@ -148,15 +154,19 @@ object CuratedCorpusLayout {
   def build(spark: SparkSession, dir: String, prefix: String,
       buckets: Int = 8): Unit = {
     val (survivors, attrition) = DedupQueries.curateChain(spark, dir)
-    val text = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-    val art = survivors
-      .select(col("doc_id"), col("source"), col("h"), col("n_tokens"))
-      .join(text, "doc_id")
-    BucketedTables.replaceBucketed(spark, s"${prefix}_docs", "doc_id",
-      buckets, art)
+    replaceDocs(spark, dir, prefix, buckets, survivors)
     publishSidecars(spark, prefix, attrition)
   }
+
+  /** Swap in the survivors JOINED BACK to their corpus text as the new
+    * `_docs` artifact (atomic to readers). */
+  private def replaceDocs(spark: SparkSession, dir: String, prefix: String,
+      buckets: Int, survivors: DataFrame): Unit =
+    BucketedTables.replaceBucketed(spark, Docs.name(prefix), Docs.key,
+      buckets,
+      survivors.select(col("doc_id"), col("source"), col("h"), col("n_tokens"))
+        .join(Tables.load(spark, dir, "documents")
+          .select(col("doc_id"), col("text")), "doc_id"))
 
   /** Publish manifest + checksums, each through its own atomic
     * replace-swap (a plain mode-overwrite drops the old table before
@@ -394,13 +404,8 @@ object CuratedCorpusLayout {
         .select(col("doc_id"), col("text")),
       s"${prefix}_texts", "doc_id", buckets)
     val (s7, attrition) = gateFromState(spark, prefix)
-    val text = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
     faultHook("before-docs-swap")
-    BucketedTables.replaceBucketed(spark, s"${prefix}_docs", "doc_id",
-      buckets,
-      s7.select(col("doc_id"), col("source"), col("h"), col("n_tokens"))
-        .join(text, "doc_id"))
+    replaceDocs(spark, dir, prefix, buckets, s7)
     // the tombstone clear belongs to the NEW artifact's publication
     // (the rebuilt docs bake every refresh eviction in), so it sits
     // AFTER the swap: a rebuild crashing before the swap leaves the
@@ -481,11 +486,7 @@ object CuratedCorpusLayout {
       buckets: Int = 8): Unit = {
     val deltaDocs = deltaDocs0.dropDuplicates("doc_id").localCheckpoint(true)
     val ids = deltaDocs.select(col("doc_id")).localCheckpoint(true)
-    val shD = DedupQueries.withSizes(DedupQueries.shinglesOf(deltaDocs))
-      .localCheckpoint(true)
-    val bD = DedupQueries.minhashBandsOf(
-        DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s"))))
-      .localCheckpoint(true)
+    val (shD, bD) = DedupIndexLayout.signaturePass(deltaDocs)
     refreshWith(spark, dir, prefix, deltaDocs, ids, shD, bD, deltaVecs,
       buckets)
   }
@@ -592,40 +593,15 @@ object CuratedCorpusLayout {
       buckets,
       DedupQueries.cosPairsState(lookupE, storedBands, dBands,
         spark.table(s"${prefix}_cos_pairs"), dIds))
-    BucketedTables.appendBucketed(
-      deltaVecs.dropDuplicates("vec_id")
-        .join(BucketedTables.read(spark, s"${prefix}_vecs")
-            .select(col("vec_id"))
-            .join(broadcast(dIds), Seq("vec_id"), "left_semi").distinct(),
-          Seq("vec_id"), "left_anti"),
-      s"${prefix}_vecs", "vec_id", buckets)
-    spark.catalog.refreshTable(s"${prefix}_vecs")
-    // (idempotence anti-joins below restrict the stored side to the
-    // delta's own ids first — a broadcast semi scan instead of a
-    // corpus-wide distinct shuffle)
-    BucketedTables.appendBucketed(
-      dBands.join(BucketedTables.read(spark, s"${prefix}_cos_bands")
-          .select(col("vec_id"))
-          .join(broadcast(dIds), Seq("vec_id"), "left_semi").distinct(),
-        Seq("vec_id"), "left_anti"),
-      s"${prefix}_cos_bands", "code", buckets)
-    spark.catalog.refreshTable(s"${prefix}_cos_bands")
+    DeltaIndex.appendAntiJoined(spark, prefix, Vecs,
+      deltaVecs.dropDuplicates("vec_id"), buckets, Some(dIds))
+    DeltaIndex.appendAntiJoined(spark, prefix, CosBands, dBands, buckets,
+      Some(dIds))
     // 5. base rows + the streamed texts system-of-record
-    BucketedTables.appendBucketed(
-      deltaBase.join(BucketedTables.read(spark, s"${prefix}_base")
-          .select(col("doc_id"))
-          .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct(),
-        Seq("doc_id"), "left_anti"),
-      s"${prefix}_base", "doc_id", buckets)
-    spark.catalog.refreshTable(s"${prefix}_base")
-    BucketedTables.appendBucketed(
-      deltaDocs.select(col("doc_id"), col("text"))
-        .join(BucketedTables.read(spark, s"${prefix}_texts")
-            .select(col("doc_id"))
-            .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct(),
-          Seq("doc_id"), "left_anti"),
-      s"${prefix}_texts", "doc_id", buckets)
-    spark.catalog.refreshTable(s"${prefix}_texts")
+    DeltaIndex.appendAntiJoined(spark, prefix, Base, deltaBase, buckets,
+      Some(ids))
+    DeltaIndex.appendAntiJoined(spark, prefix, Texts,
+      deltaDocs.select(col("doc_id"), col("text")), buckets, Some(ids))
     // 6. re-gate from the updated state; 7. apply the survivor diff
     val (s7, attrition) = gateFromState(spark, prefix)
     applyArtifactDelta(spark, dir, prefix, buckets,
@@ -646,18 +622,14 @@ object CuratedCorpusLayout {
   def refreshStream(spark: SparkSession, dir: String, prefix: String,
       assetStream: DataFrame, buckets: Int = 8,
       checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = assetStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, _: Long) =>
-        refresh(spark, dir, prefix,
-          batch.select(col("doc_id"), col("source"), col("text")),
-          batch.filter(col("embedding").isNotNull)
-            .select(col("doc_id").as("vec_id"), col("embedding")),
-          buckets)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(assetStream, checkpoint) { (batch, _) =>
+      refresh(spark, dir, prefix,
+        batch.select(col("doc_id"), col("source"), col("text")),
+        batch.filter(col("embedding").isNotNull)
+          .select(col("doc_id").as("vec_id"), col("embedding")),
+        buckets)
+    }
 
   /** Apply a new survivor set to the served artifact as a DIFF —
     * evict (tombstone, immediate via [[serve]]'s filter), revive
@@ -704,17 +676,12 @@ object CuratedCorpusLayout {
     spark.catalog.refreshTable(s"${prefix}_docs")
   }
 
-  /** Maintenance: rewrite the docs table to one file per bucket,
-    * erasing tombstoned (evicted) rows physically, and clear the
-    * tombstone list — [[serve]] results identical before and after.
-    * Same-JVM refreshes are quiesced per table by the
-    * [[BucketedTables]] lock. */
+  /** [[DeltaIndex.compact]] of the docs table: erases tombstoned
+    * (evicted) rows physically — [[serve]] results identical before
+    * and after. */
   def compactDocs(spark: SparkSession, prefix: String,
-      buckets: Int = 8): Unit = {
-    BucketedTables.compact(spark, s"${prefix}_docs", "doc_id", buckets,
-      df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    Tombstones.clear(spark, prefix)
-  }
+      buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, prefix, Seq(Docs), buckets)
 
   /** SATURATION audit of the LIVE frozen cosine geometry — the
     * `dedup_cosine_pool_audit` rollup fed from the persisted

@@ -38,13 +38,14 @@ import graft.util.Tables
   * to pairs touching the delta (DedupIndexLayoutSpec asserts it in
   * both directions).
   *
-  * Reference point: the reference maintains derived state
-  * incrementally ahead of reads — the consumer's upsert-merge of
-  * partial aggregates per micro-batch (consumer/consumer.py:321-367) —
-  * rather than recomputing from history; this is that discipline
-  * applied to dedup state.
+  * Lifecycle (stream twin, purge, compaction, coverage gauge):
+  * [[DeltaIndex]].
   */
 object DedupIndexLayout {
+
+  private val Shingles = DeltaIndex.Table("shingles", "doc_id", "doc_id")
+  private val Bands = DeltaIndex.Table("bands", "key", "doc_id")
+  private val Cm = DeltaIndex.Table("cm", "s", "doc_id")
 
   /** The s-keyed inverted sidecar's table name: the SAME sized
     * postings as `<prefix>_shingles` plus the content-hash `is_train`
@@ -57,7 +58,26 @@ object DedupIndexLayout {
     * copy of the postings — bought against a per-micro-batch full
     * scan+shuffle of the primary (s is not its bucket key), which at a
     * continuous-ingest deployment is paid forever. */
-  def cmTable(prefix: String): String = s"${prefix}_cm"
+  def cmTable(prefix: String): String = Cm.name(prefix)
+
+  /** The delta's (doc_id, is_train) split — what the sidecar files
+    * next to each posting. */
+  private[sources] def splitOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), DedupQueries.isTrainOf.as("is_train"))
+
+  /** The delta's signature pass — sized shingles and MinHash band rows
+    * of the doc_id-distinct `docs` — the ONE derivation the check, the
+    * filing, the curated refresh and [[IngestGate]] share. `mat` pins
+    * each frame (default) or leaves it lazy (the gate's bulk deltas);
+    * the content is identical either way. */
+  private[sources] def signaturePass(docs: DataFrame,
+      mat: DataFrame => DataFrame = _.localCheckpoint(true))
+      : (DataFrame, DataFrame) = {
+    val shD = mat(DedupQueries.withSizes(DedupQueries.shinglesOf(docs)))
+    val bD = mat(DedupQueries.minhashBandsOf(
+      DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s")))))
+    (shD, bD)
+  }
 
   /** Build the index over the documents matching `where`: one
     * tokenize+shingle pass feeds both tables (the expensive stage —
@@ -77,22 +97,19 @@ object DedupIndexLayout {
     val sh = DedupQueries.shinglesOf(d).persist()
     sh.count()
     BucketedTables.writeBucketed(DedupQueries.withSizes(sh),
-      s"${prefix}_shingles", "doc_id", buckets)
+      Shingles.name(prefix), Shingles.key, buckets)
     BucketedTables.writeBucketed(
       DedupQueries.minhashBandsOf(DedupQueries.minhashSigFrom(sh)),
-      s"${prefix}_bands", "key", buckets)
+      Bands.name(prefix), Bands.key, buckets)
     if (contamSidecar)
       // the same sized postings, joined to the per-doc split flag and
       // re-bucketed by s (one more write off the cached shingle pass)
       BucketedTables.writeBucketed(
-        DedupQueries.withSizes(sh).join(
-          d.select(col("doc_id"), DedupQueries.isTrainOf.as("is_train")),
-          Seq("doc_id")),
-        cmTable(prefix), "s", buckets)
+        DedupQueries.withSizes(sh).join(splitOf(d), Seq("doc_id")),
+        Cm.name(prefix), Cm.key, buckets)
     sh.unpersist(false)
     // the ingest ledger: every corpus doc is fully filed by definition
-    BucketedTables.writeBucketed(d.select(col("doc_id").as("id")),
-      IngestLedger.table(prefix), "id", buckets)
+    IngestLedger.create(d.select(col("doc_id")), prefix, buckets)
   }
 
   /** Incremental maintenance: shingle + sign ONLY the given documents
@@ -109,66 +126,37 @@ object DedupIndexLayout {
     * Within-batch duplicate doc_ids collapse first. */
   def appendDeltaDocs(spark: SparkSession, prefix: String,
       docs0: DataFrame, buckets: Int = 8): Unit = {
-    val docs = docs0.dropDuplicates("doc_id")
+    val docs = docs0.dropDuplicates("doc_id").localCheckpoint(true)
     val ids = docs.select(col("doc_id")).localCheckpoint(true)
-    val shD = DedupQueries.withSizes(DedupQueries.shinglesOf(docs))
-      .localCheckpoint(true)
-    val bD = DedupQueries.minhashBandsOf(
-        DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s"))))
-      .localCheckpoint(true)
+    val (shD, bD) = signaturePass(docs)
     appendDeltaDocsFrom(spark, prefix, ids, shD, bD, buckets,
-      Some(docs.select(col("doc_id"), DedupQueries.isTrainOf.as("is_train"))))
+      Some(splitOf(docs)))
   }
 
   /** [[appendDeltaDocs]] with the delta's shingle/band passes
     * PRECOMPUTED — the composed snapshot path
     * ([[IngestGate.ingestAndCurate]]) files the same materialized
     * frames the check and the curated refresh consumed, so a snapshot
-    * pays the shingle pass exactly once. Same ledger/idempotence
-    * discipline as the public entry. `trainOf` is the delta's
+    * pays the shingle pass exactly once. `trainOf` is the delta's
     * (doc_id, is_train) split, REQUIRED whenever the prefix carries
-    * the [[cmTable]] sidecar (which files the same rows keyed by `s`);
-    * a sidecar-equipped index silently going stale on appends would
-    * corrupt every future decontamination verdict, so the mismatch
-    * fails loudly instead. */
+    * the [[cmTable]] sidecar (which files the same rows keyed by `s`,
+    * under the same intent split, so a crash between any two appends
+    * is healed per table on retry); a sidecar-equipped index silently
+    * going stale on appends would corrupt every future
+    * decontamination verdict, so the mismatch fails loudly instead. */
   private[sources] def appendDeltaDocsFrom(spark: SparkSession,
       prefix: String, ids: DataFrame, shD: DataFrame, bD: DataFrame,
       buckets: Int, trainOf: Option[DataFrame] = None): Unit = {
-    val hasCm = spark.catalog.tableExists(cmTable(prefix))
+    val hasCm = spark.catalog.tableExists(Cm.name(prefix))
     require(!hasCm || trainOf.isDefined,
       s"$prefix carries the ${cmTable(prefix)} sidecar: appends must " +
         "supply the delta's (doc_id, is_train) split so the sidecar " +
         "files the same rows (a stale sidecar corrupts every future " +
         "decontamination verdict)")
-    val split = IngestLedger.begin(spark, prefix, ids, buckets,
-      BucketedTables.read(spark, s"${prefix}_shingles").select(col("doc_id")))
-    BucketedTables.appendBucketed(
-      IngestLedger.filed(shD, "doc_id", split,
-        BucketedTables.read(spark, s"${prefix}_shingles")
-          .select(col("doc_id")).distinct()),
-      s"${prefix}_shingles", "doc_id", buckets)
-    BucketedTables.appendBucketed(
-      IngestLedger.filed(bD, "doc_id", split,
-        BucketedTables.read(spark, s"${prefix}_bands")
-          .select(col("doc_id")).distinct()),
-      s"${prefix}_bands", "key", buckets)
-    if (hasCm)
-      // the sidecar rides the SAME intent split; its dirty fallback
-      // anti-joins its OWN stored doc_ids, so a crash between any two
-      // of the three appends is healed per-table on retry
-      BucketedTables.appendBucketed(
-        IngestLedger.filed(
-          shD.join(org.apache.spark.sql.functions.broadcast(trainOf.get),
-            Seq("doc_id")),
-          "doc_id", split,
-          BucketedTables.read(spark, cmTable(prefix))
-            .select(col("doc_id")).distinct()),
-        cmTable(prefix), "s", buckets)
-    // a foreachBatch clone's write must not leave the serving session
-    // reading the pre-delta file listing (see AnnIndexLayout)
-    spark.catalog.refreshTable(s"${prefix}_shingles")
-    spark.catalog.refreshTable(s"${prefix}_bands")
-    if (hasCm) spark.catalog.refreshTable(cmTable(prefix))
+    DeltaIndex.appendLedgered(spark, prefix, ids, buckets,
+      Seq(Shingles -> shD, Bands -> bD) ++ trainOf.filter(_ => hasCm).map(
+        tr => Cm -> shD.join(org.apache.spark.sql.functions.broadcast(tr),
+          Seq("doc_id"))))
   }
 
   /** Check a delta of NEW documents against corpus + delta: verified
@@ -183,11 +171,7 @@ object DedupIndexLayout {
       newDocs: DataFrame): DataFrame = {
     val docs = newDocs.dropDuplicates("doc_id").localCheckpoint(true)
     val ids = docs.select(col("doc_id")).localCheckpoint(true)
-    val shD = DedupQueries.withSizes(DedupQueries.shinglesOf(docs))
-      .localCheckpoint(true)
-    val bD = DedupQueries.minhashBandsOf(
-        DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s"))))
-      .localCheckpoint(true)
+    val (shD, bD) = signaturePass(docs)
     dedupDeltaFrom(spark, prefix, ids, shD, bD)
   }
 
@@ -210,19 +194,14 @@ object DedupIndexLayout {
     * linear term. */
   private[sources] def dedupDeltaFrom(spark: SparkSession, prefix: String,
       ids: DataFrame, shD: DataFrame, bD: DataFrame): DataFrame = {
-    val sized = Tombstones.filter(spark, prefix,
-      BucketedTables.read(spark, s"${prefix}_shingles"), "doc_id")
-    val bands = Tombstones.filter(spark, prefix,
-      BucketedTables.read(spark, s"${prefix}_bands"), "doc_id")
+    val sized = DeltaIndex.live(spark, prefix, prefix, Shingles)
+    val bands = DeltaIndex.live(spark, prefix, prefix, Bands)
     val maxDocs = ScanPrune.maxDeltaDocs(spark)
     if (maxDocs > 0L && ids.count() <= maxDocs) {
       // the delta's band keys bound what candidate generation can
       // match on the corpus side
-      val keys = bD.select(col("key")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      ScanPrune.ensureInPushdown(spark, keys.length)
-      val cand = DedupQueries.deltaCandidatesFrom(
-          ScanPrune.inSet(bands, "key", keys), ids, bD)
+      val cand = DedupQueries.deltaCandidatesFrom(ScanPrune.pushedInSet(
+          spark, bands, "key", bD.select(col("key")).distinct()), ids, bD)
         .localCheckpoint(true)
       // the candidates' CORPUS doc_ids bound what verification can
       // read (the delta side's shingles come from shD); a degenerate
@@ -238,16 +217,15 @@ object DedupIndexLayout {
           Seq("doc_a"), "left_anti")
       val nCand = candCorpus.count()
       val sizedIn =
-        if (nCand <= 16L * maxDocs) {
-          val candIds = candCorpus.collect().map(_.getLong(0)).toSeq
-          ScanPrune.ensureInPushdown(spark, candIds.length)
-          // candidate-sized after the filter — materialize ONCE so the
-          // two verification legs (sa/sb) read checkpointed rows
-          // instead of re-scanning the corpus table per leg: the
-          // pruned path's corpus-shingle IO is ONE filtered scan per
-          // batch (the unpruned plan paid that scan twice)
-          ScanPrune.inSet(sized, "doc_id", candIds).localCheckpoint(true)
-        } else sized
+        // candidate-sized after the filter — materialize ONCE so the two
+        // verification legs (sa/sb) read checkpointed rows instead of
+        // re-scanning the corpus table per leg: the pruned path's
+        // corpus-shingle IO is ONE filtered scan per batch (the
+        // unpruned plan paid that scan twice)
+        if (nCand <= 16L * maxDocs)
+          ScanPrune.pushedInSet(spark, sized, "doc_id", candCorpus)
+            .localCheckpoint(true)
+        else sized
       DedupQueries.deltaVerifyFrom(cand, sizedIn, ids, shD)
     } else DedupQueries.deltaPairsCoreFrom(sized, bands, ids, shD, bD)
   }
@@ -255,41 +233,21 @@ object DedupIndexLayout {
   /** CONTINUOUS ingest: a stream of (doc_id, text) rows is deduped
     * against the corpus-so-far and then filed into it, one micro-batch
     * at a time — check first ([[dedupDelta]] through `sink`), then
-    * append ([[appendDeltaDocs]]) — inside `foreachBatch` (the pair
-    * join + verification are batch plans Structured Streaming forbids
-    * on unbounded input; same stream-to-batch bridge as
-    * [[AnnIndexLayout.maintainStream]]).
-    *
-    * Restart safety: a replayed batch re-emits its pair rows (the
-    * check runs before the append and the core's delta-id anti-join
-    * hides the already-filed copies, so the pairs are IDENTICAL, not
-    * doubled) while the append files nothing — at-least-once pair
-    * emission over an exactly-once index, so the sink's usual
-    * idempotent-upsert contract (keyed on (doc_a, doc_b) or batchId)
-    * completes exactly-once end to end. */
+    * append ([[appendDeltaDocs]]), off ONE materialized signature pass
+    * ([[DeltaIndex]]'s check-then-append contract: a replayed batch
+    * re-emits IDENTICAL pairs while the append files nothing). */
   def ingestStream(spark: SparkSession, prefix: String,
       docStream: DataFrame, buckets: Int = 8,
       checkpoint: Option[String] = None)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one materialized shingle/band pass serves the check AND the
-        // filing — previously each leg re-shingled the batch
-        val docs = batch.dropDuplicates("doc_id").localCheckpoint(true)
-        val ids = docs.select(col("doc_id")).localCheckpoint(true)
-        val shD = DedupQueries.withSizes(DedupQueries.shinglesOf(docs))
-          .localCheckpoint(true)
-        val bD = DedupQueries.minhashBandsOf(
-            DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s"))))
-          .localCheckpoint(true)
-        sink(dedupDeltaFrom(spark, prefix, ids, shD, bD), batchId)
-        appendDeltaDocsFrom(spark, prefix, ids, shD, bD, buckets,
-          Some(docs.select(col("doc_id"),
-            DedupQueries.isTrainOf.as("is_train"))))
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(docStream, checkpoint) { (batch, batchId) =>
+      val docs = batch.dropDuplicates("doc_id").localCheckpoint(true)
+      val ids = docs.select(col("doc_id")).localCheckpoint(true)
+      val (shD, bD) = signaturePass(docs)
+      sink(dedupDeltaFrom(spark, prefix, ids, shD, bD), batchId)
+      appendDeltaDocsFrom(spark, prefix, ids, shD, bD, buckets,
+        Some(splitOf(docs)))
+    }
 
   /** Right-to-be-forgotten against the dedup state: tombstone the
     * given doc_ids — [[dedupDelta]] stops matching them immediately
@@ -300,51 +258,15 @@ object DedupIndexLayout {
       docIds: DataFrame): Unit =
     Tombstones.purge(spark, prefix, docIds)
 
-  /** COVERAGE gauge for a scheduled ingest: how much of the live
-    * documents table the dedup state actually covers — the number a
-    * daily crawl job alerts on before trusting [[dedupDelta]]'s "no
-    * duplicates" verdict (an unindexed corpus slice can hide dups).
-    * One row: live docs, indexed docs (tombstones excluded), coverage
-    * in ppm, and the tombstone backlog the next [[compact]] clears.
-    * Doc-id grains only — no shingle work, so it runs per schedule
-    * tick. */
+  /** Coverage gauge ([[DeltaIndex.coverage]]) over the shingle index:
+    * run before trusting [[dedupDelta]]'s "no duplicates" verdict. */
   def stalenessMetrics(spark: SparkSession, dir: String,
-      prefix: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    val live = Tables.load(spark, dir, "documents")
-      .agg(count(lit(1)).as("n_docs_live"))
-    val indexed = Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${prefix}_shingles")
-          .select(col("doc_id")).distinct(), "doc_id")
-      .agg(count(lit(1)).as("n_docs_indexed"))
-    val tomb = Tombstones.ids(spark, prefix)
-      .agg(count(lit(1)).as("n_tombstoned"))
-    live.crossJoin(broadcast(indexed)).crossJoin(broadcast(tomb))
-      .select(col("n_docs_live"), col("n_docs_indexed"),
-        round(col("n_docs_indexed").cast("double") /
-          col("n_docs_live").cast("double") * 1e6)
-          .cast(LongType).as("coverage_ppm"),
-        col("n_tombstoned"))
-  }
+      prefix: String): DataFrame =
+    DeltaIndex.coverage(spark, dir, prefix, Shingles)
 
-  /** Rewrite both tables back to one file per bucket, erasing
-    * tombstoned docs' rows in the same pass and clearing the tombstone
-    * list ([[BucketedTables.compact]]'s write-aside + checked-rename
-    * swap). Same-JVM ingest writers are quiesced by the per-table lock
-    * ([[BucketedTables]] header); an append racing this pass waits and
-    * lands in the compacted table. */
-  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit = {
-    BucketedTables.compact(spark, s"${prefix}_shingles", "doc_id", buckets,
-      df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    BucketedTables.compact(spark, s"${prefix}_bands", "key", buckets,
-      df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    // the sidecar erases the same tombstoned docs' rows in its pass,
-    // so the two postings copies can never disagree after a compact
-    if (spark.catalog.tableExists(cmTable(prefix)))
-      BucketedTables.compact(spark, cmTable(prefix), "s", buckets,
-        df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    IngestLedger.compact(spark, prefix, buckets)
-    Tombstones.clear(spark, prefix)
-  }
+  /** [[DeltaIndex.compact]] over both tables and the sidecar (so the
+    * two postings copies can never disagree after a compact). */
+  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, prefix, Seq(Shingles, Bands) ++
+      Seq(Cm).filter(t => spark.catalog.tableExists(t.name(prefix))), buckets)
 }

@@ -95,11 +95,50 @@ private[sources] object GenerationPointer {
     s"${prefix}_g$g"
   }
 
+  /** Generation-or-legacy resolution: a prefix built generationally
+    * resolves through the pointer; a pre-pointer prefix (tables at the
+    * logical names, no view — detected by `legacyTable`) keeps
+    * resolving as itself until its next rebuild publishes; loud when
+    * nothing is built. */
+  def physOrLegacy(spark: SparkSession, prefix: String,
+      legacyTable: String): String =
+    if (!spark.catalog.tableExists(view(prefix)) &&
+        spark.catalog.tableExists(s"${prefix}_$legacyTable")) prefix
+    else livePrefix(spark, prefix)
+
   /** The physical prefix the NEXT build writes under, with its
     * generation number. */
   def nextPrefix(spark: SparkSession, prefix: String): (String, Long) = {
     val next = liveGen(spark, prefix).getOrElse(0L) + 1L
     (s"${prefix}_g$next", next)
+  }
+
+  /** GENERATIONAL rebuild: sweep stale generations, let `write` fill
+    * every table of the next generation under the physical prefix it
+    * is given — a crash anywhere in it leaves the live generation
+    * serving — then publish with the one atomic pointer flip and only
+    * afterwards drop the superseded generation (deferred when
+    * `dropSuperseded` is false). `dropLegacy` also drops a pre-pointer
+    * layout's logical-name `tables`, unconditionally rather than only
+    * on the first publish: a first generational build crashed between
+    * publish and this drop would otherwise leak them forever.
+    * `faultHook` is called at the named points and may throw (the
+    * publish-crash specs). */
+  def rebuild(spark: SparkSession, prefix: String, tables: Seq[String],
+      dropSuperseded: Boolean, dropLegacy: Boolean,
+      faultHook: String => Unit)(write: String => Unit): Unit = {
+    val cur = liveGen(spark, prefix)
+    val (tp, nextGen) = nextPrefix(spark, prefix)
+    sweepStale(spark, prefix)
+    write(tp)
+    faultHook("before-publish")
+    publish(spark, prefix, nextGen)
+    faultHook("after-publish")
+    if (dropSuperseded) {
+      cur.foreach(g => dropGeneration(spark, prefix, g, tables))
+      if (dropLegacy) tables.foreach(t =>
+        BucketedTables.dropWithOrphanDir(spark, s"${prefix}_$t"))
+    }
   }
 
   /** PUBLISH generation `gen`: one atomic catalog operation. Every

@@ -45,27 +45,19 @@ object HybridIndexLayout {
 
   // ---- dense leg: persisted LSH signatures ----------------------------
 
-  /** The dense leg's table set — one copy per generation. A single
-    * table, so each [[BucketedTables.replaceBucketed]] swap was
-    * already atomic in isolation; the generation pointer aligns the
-    * leg with [[TextIndexLayout]]/[[AnnIndexLayout]] (one publication
-    * discipline across every index layout) and buys the same deferred
-    * superseded-drop option for long-running concurrent queries. */
-  private val DenseTables = Seq("sigs")
+  private val Sigs = DeltaIndex.Table("sigs", "bucket", "vec_id")
+
+  /** The dense leg's table set — one copy per generation (the one
+    * publication discipline across every index layout). */
+  private val DenseTables = Seq(Sigs.suffix)
 
   /** The PHYSICAL prefix of the dense leg's live generation
     * ([[GenerationPointer]]). */
   def livePrefixDense(spark: SparkSession, prefix: String): String =
     GenerationPointer.livePrefix(spark, prefix)
 
-  /** Generation-or-legacy resolution (the [[TextIndexLayout]]
-    * convention): pointer if published, logical-name table for a
-    * pre-pointer prefix, loud error when nothing is built. */
   private def physDense(spark: SparkSession, prefix: String): String =
-    if (spark.catalog.tableExists(GenerationPointer.view(prefix)))
-      GenerationPointer.livePrefix(spark, prefix)
-    else if (spark.catalog.tableExists(s"${prefix}_sigs")) prefix
-    else GenerationPointer.livePrefix(spark, prefix) // loud: nothing built
+    GenerationPointer.physOrLegacy(spark, prefix, Sigs.suffix)
 
   /** Build the signature table over the vectors matching `where`: one
     * corpus scan (norm + 8 plane projections per vector), bucketed by
@@ -77,47 +69,29 @@ object HybridIndexLayout {
     buildDenseImpl(spark, dir, prefix, buckets, where, dropSuperseded,
       _ => ())
 
-  /** [[buildDense]] with the publish-crash fault hook (spec'd like
-    * AnnPublishSpec/TextPublishSpec). */
+  /** [[buildDense]] with the publish-crash fault hook
+    * ([[GenerationPointer.rebuild]]). */
   private[sources] def buildDenseImpl(spark: SparkSession, dir: String,
       prefix: String, buckets: Int, where: Column, dropSuperseded: Boolean,
-      faultHook: String => Unit): Unit = {
-    val cur = GenerationPointer.liveGen(spark, prefix)
-    val (tp, nextGen) = GenerationPointer.nextPrefix(spark, prefix)
-    GenerationPointer.sweepStale(spark, prefix)
-    BucketedTables.writeBucketed(
-      SimilarityQueries.lshSignatures(spark, dir, where),
-      s"${tp}_sigs", "bucket", buckets)
-    faultHook("before-publish")
-    GenerationPointer.publish(spark, prefix, nextGen)
-    faultHook("after-publish")
-    if (dropSuperseded) {
-      cur.foreach(g =>
-        GenerationPointer.dropGeneration(spark, prefix, g, DenseTables))
-      // unconditional (not `cur.isEmpty`-gated): heals the legacy-name
-      // leak when the FIRST generational build crashed between publish
-      // and this drop ([[TextIndexLayout.buildImpl]] note)
-      DenseTables.foreach(t =>
-        BucketedTables.dropWithOrphanDir(spark, s"${prefix}_$t"))
+      faultHook: String => Unit): Unit =
+    GenerationPointer.rebuild(spark, prefix, DenseTables, dropSuperseded,
+        dropLegacy = true, faultHook) { tp =>
+      BucketedTables.writeBucketed(
+        SimilarityQueries.lshSignatures(spark, dir, where),
+        Sigs.name(tp), Sigs.key, buckets)
     }
-  }
 
   /** Sweep the dense leg's stale generations — [[TextIndexLayout
-    * .sweepStaleGenerations]]'s contract: `keepGenerations = 0` is the
-    * deferred-drop deployment's explicit post-latency reclaim (also
-    * drops pre-pointer logical-name tables once a generation is
-    * published). The runnable sequence is the deferred-drop recipe in
-    * [[GenerationPointer]]'s scaladoc. */
+    * .sweepStaleGenerations]]'s contract. */
   def sweepStaleGenerationsDense(spark: SparkSession, prefix: String,
       keepGenerations: Int = 1): Unit =
     GenerationPointer.sweepStale(spark, prefix, keepGenerations, DenseTables)
 
   /** Incremental maintenance — encode ONLY the vectors matching
     * `where` and append their signatures. Idempotent under retries via
-    * the vec_id anti-join (the [[TextIndexLayout.appendDeltaDocs]]
-    * discipline): a replayed delta files nothing twice — a duplicated
-    * signature row would duplicate its vector in every future
-    * candidate list. */
+    * the vec_id anti-join ([[DeltaIndex.appendAntiJoined]]): a replayed
+    * delta files nothing twice — a duplicated signature row would
+    * duplicate its vector in every future candidate list. */
   def appendDeltaDense(spark: SparkSession, dir: String, prefix: String,
       where: Column, buckets: Int = 8): Unit =
     appendDeltaVectorsDense(spark, prefix,
@@ -126,36 +100,19 @@ object HybridIndexLayout {
 
   /** [[appendDeltaDense]] for an ARBITRARY (vec_id, embedding) frame —
     * the encode surface a stream of new vectors feeds micro-batch at a
-    * time. */
+    * time. Within-batch duplicates collapse first (the anti-join dedups
+    * only against the PERSISTED signatures). */
   def appendDeltaVectorsDense(spark: SparkSession, prefix: String,
-      vecs: DataFrame, buckets: Int = 8): Unit = {
-    // resolved once per delta (the single-writer contract — see
-    // TextIndexLayout.appendDeltaDocs)
-    val pp = physDense(spark, prefix)
-    // the anti-join dedups only against the PERSISTED signatures; a
-    // batch carrying the same vec_id twice would pass it twice and
-    // file duplicate signature rows — dedup within the batch first
-    BucketedTables.appendBucketed(
+      vecs: DataFrame, buckets: Int = 8): Unit =
+    DeltaIndex.appendAntiJoined(spark, physDense(spark, prefix), Sigs,
       SimilarityQueries.lshSignaturesOf(SimilarityQueries.normedVectors(
-          vecs.dropDuplicates("vec_id")))
-        .join(BucketedTables.read(spark, s"${pp}_sigs")
-          .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti"),
-      s"${pp}_sigs", "bucket", buckets)
-    spark.catalog.refreshTable(s"${pp}_sigs")
-  }
+        vecs.dropDuplicates("vec_id"))), buckets)
 
-  /** Rewrite the delta-accumulated signatures back to one file per
-    * bucket, erasing any tombstoned vectors' rows in the same rewrite
-    * and clearing the tombstone list. Same-JVM delta writers are
-    * quiesced by the per-table lock ([[BucketedTables]] header). */
+  /** [[DeltaIndex.compact]] of the signatures. */
   def compactDense(spark: SparkSession, prefix: String,
-      buckets: Int = 8): Unit = {
-    // sigs live at the generation grain; tombstones at the logical
-    // prefix (they must keep filtering across rebuilds)
-    BucketedTables.compact(spark, s"${physDense(spark, prefix)}_sigs",
-      "bucket", buckets, df => Tombstones.filter(spark, prefix, df, "vec_id"))
-    Tombstones.clear(spark, prefix)
-  }
+      buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, physDense(spark, prefix), Seq(Sigs),
+      buckets)
 
   /** Right-to-be-forgotten against the dense leg: tombstone the given
     * vector ids — [[serveDense]]/[[serveHybrid]] exclude them from the
@@ -173,9 +130,7 @@ object HybridIndexLayout {
   def serveDense(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame, excludeSelf: Boolean = false): DataFrame =
     SimilarityQueries.lshServeQueriesWith(spark, dir, queries,
-      Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${physDense(spark, prefix)}_sigs"),
-        "vec_id"),
+      DeltaIndex.live(spark, prefix, physDense(spark, prefix), Sigs),
       excludeSelf)
 
   // ---- fused serving --------------------------------------------------
@@ -243,10 +198,8 @@ object HybridIndexLayout {
       textPrefix: String, densePrefix: String, queryStream: DataFrame,
       excludeSelf: Boolean = false)(sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(serveHybrid(spark, dir, textPrefix, densePrefix, batch,
-          excludeSelf), batchId)
-      }
-      .start()
+    DeltaIndex.stream(queryStream) { (batch, batchId) =>
+      sink(serveHybrid(spark, dir, textPrefix, densePrefix, batch,
+        excludeSelf), batchId)
+    }
 }

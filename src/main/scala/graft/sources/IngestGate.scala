@@ -23,15 +23,16 @@ import org.apache.spark.sql.types.LongType
   * query row-for-row, so the deployment path and the oracle cannot
   * drift.
   *
-  * Replay safety is inherited from the three layouts: every check
-  * anti-joins the delta's own filed rows (or self-excludes, for the
-  * vector tier), so re-running [[checkDelta]] after [[appendDelta]] —
-  * a restarted micro-batch — returns the identical verdicts, and the
-  * appends file nothing twice. At-least-once verdict emission over
-  * exactly-once indexes, the [[DedupIndexLayout.ingestStream]]
-  * contract for the whole snapshot at once.
+  * Replay safety is inherited from the three layouts — the
+  * [[DeltaIndex]] check-then-append lifecycle for the whole snapshot
+  * at once.
   */
 object IngestGate {
+
+  /** The corpus's content-hash train/eval split — the eval side of the
+    * decontamination verdict (narrow, doc_id-bucketed; text never
+    * re-read at check time). */
+  private val Split = DeltaIndex.Table("split", "doc_id", "doc_id")
 
   /** Build all three persisted indexes under one prefix. `whereDocs`
     * picks the corpus documents (text + media share the doc grain);
@@ -50,15 +51,18 @@ object IngestGate {
       contamSidecar = true)
     MediaIndexLayout.build(spark, dir, s"${prefix}_mm", buckets, whereDocs)
     AnnIndexLayout.build(spark, dir, s"${prefix}_ann", buckets, whereVecs)
-    // the content-hash train/eval split of the corpus — the eval side
-    // of the decontamination verdict (narrow, doc_id-bucketed; text
-    // never re-read at check time)
-    BucketedTables.writeBucketed(
-      graft.util.Tables.load(spark, dir, "documents").filter(whereDocs)
-        .select(col("doc_id"),
-          graft.queries.DedupQueries.isTrainOf.as("is_train")),
-      s"${prefix}_split", "doc_id", buckets)
+    BucketedTables.writeBucketed(DedupIndexLayout.splitOf(
+        graft.util.Tables.load(spark, dir, "documents").filter(whereDocs)),
+      Split.name(prefix), Split.key, buckets)
   }
+
+  /** One prefix would alias the gate's `_dd`/`_split` tables onto the
+    * curated layout's — the gate's filing would silently change the
+    * refresh's dedup semantics — so the composed entry points fail fast. */
+  private def distinctPrefixes(gatePrefix: String,
+      curatedPrefix: String): Unit =
+    require(gatePrefix != curatedPrefix,
+      s"gatePrefix and curatedPrefix must be distinct (both '$gatePrefix')")
 
   /** [[build]] + [[CuratedCorpusLayout.buildIncremental]] with ONE
     * shingle index between them: the curated layout borrows the gate's
@@ -78,8 +82,7 @@ object IngestGate {
       whereDocs: Column = lit(true), whereVecs: Column = lit(true),
       cosNBands: Int = graft.queries.DedupQueries.CosineLshBands,
       cosPlanesPerBand: Int = CuratedCorpusLayout.AutoPlanes): Unit = {
-    require(gatePrefix != curatedPrefix,
-      s"gatePrefix and curatedPrefix must be distinct (both '$gatePrefix')")
+    distinctPrefixes(gatePrefix, curatedPrefix)
     build(spark, dir, gatePrefix, buckets, whereDocs, whereVecs)
     CuratedCorpusLayout.buildIncremental(spark, dir, curatedPrefix, buckets,
       where = whereDocs, whereVec = whereVecs, cosNBands = cosNBands,
@@ -97,105 +100,73 @@ object IngestGate {
   def checkDelta(spark: SparkSession, dir: String, prefix: String,
       newDocs: DataFrame, newVecs: DataFrame,
       minCosine: Double = 0.4): DataFrame = {
-    import graft.queries.DedupQueries
     val nd = newDocs.dropDuplicates("doc_id").localCheckpoint(true)
-    val (ids, shD, bD, tD) = deltaFrames(nd)
-    checkDeltaWith(spark, dir, prefix, nd, ids, shD, bD, tD, newVecs,
+    checkDeltaWith(spark, dir, prefix, nd, deltaFrames(nd), newVecs,
       minCosine)
   }
 
-  /** Above this delta size the composed path's shared per-doc frames
-    * (shingles, bands, tiles) stay LAZY instead of being cached: a
-    * cached frame is computed once but every consumer re-reads its
-    * serialized rows from the block manager, while a lazy frame is
-    * recomputed per consumer FUSED into that consumer's whole-stage
-    * codegen pipeline — and past bulk-backfill size the store+re-read
-    * costs more than the recompute. Measured on the 50× salted
-    * universe (ComposedIngestBench, STREAMBENCH.md round 15): cached
-    * wins at a 10k-doc delta (0.86× vs sequential), INVERTS at 50k
-    * (1.76×, reproduced twice); lazy composition is the sequential
-    * path's plans by construction, so above the threshold composed ≈
-    * sequential in cost while keeping the composition's structural
-    * guarantees (one split definition, one verdict frame, one filing
-    * discipline). Steady-state snapshot deltas sit far below this;
-    * only bulk backfills cross it.
-    *
-    * This doc-count form survives as the EXPLICIT override
-    * (`graft.compose.cacheMaxDocs` — also the specs' force-lazy
-    * switch); the DEFAULT dial is [[ComposeCacheMaxBytes]], because
-    * the crossover is a byte phenomenon, not a row-count one. */
-  val ComposeCacheMaxDocs: Long = 16384L
+  /** The cache-vs-lazy crossover of the composed path's shared per-doc
+    * frames (shingles, bands, tiles), in SERIALIZED FRAME BYTES per
+    * consumer — the dimension that actually drives it. A cached frame
+    * is computed once but every consumer re-reads its serialized rows
+    * from the block manager, while a lazy frame is recomputed per
+    * consumer FUSED into that consumer's whole-stage codegen pipeline;
+    * past bulk-backfill size the store+re-read costs more than the
+    * recompute. Measured on the 50× salted universe
+    * (ComposedIngestBench, STREAMBENCH.md round 15): cached wins at a
+    * 10k-doc delta (0.86× vs sequential), INVERTS at 50k (1.76×,
+    * reproduced twice), on ~300-byte docs — so the boundary sits near
+    * 16 384 docs × ~300 B ≈ 5 MB of delta text, from which the per-doc
+    * frames derive roughly linearly. A doc-count dial would misclassify
+    * by the doc-length ratio in either direction. [[deltaFrames]]
+    * compares the batch's own summed text length against this bound;
+    * override via `graft.compose.cacheMaxBytes` (a negative value
+    * keeps every delta lazy). Lazy composition is the sequential path's
+    * plans by construction, so above the bound composed ≈ sequential
+    * in cost while keeping the composition's structural guarantees
+    * (one split definition, one verdict frame, one filing discipline).
+    * Steady-state snapshot deltas sit far below it. */
+  val ComposeCacheMaxBytes: Long = 16384L * 300L
 
-  /** The cache-vs-lazy crossover in the dimension that actually
-    * drives it: SERIALIZED FRAME BYTES per consumer. The measured
-    * bracket (10k-doc win / 50k-doc loss) was taken on ~300-byte docs
-    * — i.e. the win/loss boundary sits near 16 384 docs × ~300 B ≈
-    * 5 MB of delta text, from which the per-doc frames (shingles,
-    * bands, tiles) derive roughly linearly. A doc-count dial would
-    * misclassify by the doc-length ratio in either direction: a
-    * 16k-doc delta of 100 kB documents is ~300× the measured bracket
-    * (must stay lazy), a million tweet-length docs is within it (may
-    * cache). [[deltaFrames]] therefore compares the batch's own summed
-    * text length — one cheap agg over the already-checkpointed `nd` —
-    * against this bound; override via `graft.compose.cacheMaxBytes`,
-    * or pin the legacy doc-count behavior with
-    * `graft.compose.cacheMaxDocs` (which, when set, wins). */
-  val ComposeCacheMaxBytes: Long = ComposeCacheMaxDocs * 300L
+  /** The delta's per-doc frames — distinct ids, sized shingles, MinHash
+    * band rows, perceptual tile rows — defined ONCE per snapshot and
+    * threaded through every consumer (check, filing, curated refresh). */
+  private[sources] final case class DeltaFrames(ids: DataFrame,
+      shD: DataFrame, bD: DataFrame, tD: DataFrame)
 
-  /** The delta's per-doc frames — distinct ids, sized shingles,
-    * MinHash band rows, perceptual tile rows — defined ONCE per
-    * snapshot and threaded through every consumer (check, filing,
-    * curated refresh). `nd` must already be doc_id-deduplicated and
-    * materialized; every derivation below is pure (deterministic
-    * hashing over `nd`'s checkpointed rows), so consumers see
-    * identical frame CONTENT whether the frames are cached
-    * (bounded deltas: pay each pass once) or lazy (bulk deltas: each
-    * consumer recomputes, fused into its own codegen pipeline). The
-    * cache decision is BYTES-driven by default
-    * ([[ComposeCacheMaxBytes]]), with the doc-count conf as the
-    * explicit override. */
-  private def deltaFrames(nd: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import graft.queries.DedupQueries
+  /** [[DeltaFrames]] of `nd`, which must already be doc_id-distinct
+    * and materialized: the layouts' own signature passes
+    * ([[DedupIndexLayout.signaturePass]],
+    * [[graft.queries.MultimodalQueries.tileRowsOf]])
+    * — pure, deterministic hashing over `nd`'s checkpointed rows, so
+    * consumers see identical frame CONTENT whether the frames are
+    * cached (deltas within [[ComposeCacheMaxBytes]]: each pass paid
+    * once) or lazy (bulk deltas: each consumer recomputes, fused into
+    * its own codegen pipeline). */
+  private[sources] def deltaFrames(nd: DataFrame): DeltaFrames = {
     // ids always materialize: delta-sized, broadcast into every
     // consumer's anti-joins
     val ids = nd.select(col("doc_id")).localCheckpoint(true)
-    val conf = nd.sparkSession.conf
-    // the crossover is a serialized-BYTES phenomenon, so the default
-    // dial is the batch's own summed text length — one cheap agg over
-    // the checkpointed nd. An explicitly set doc-count conf wins (a
-    // deployment that knows its regime, and the specs' force-lazy
-    // switch).
-    val cache = conf.getOption("graft.compose.cacheMaxDocs") match {
-      case Some(maxDocs) => ids.count() <= maxDocs.toLong
-      case None =>
-        val maxBytes = conf.get("graft.compose.cacheMaxBytes",
-          ComposeCacheMaxBytes.toString).toLong
-        nd.agg(coalesce(sum(length(col("text"))), lit(0L)))
-          .head().getLong(0) <= maxBytes
-    }
-    def mat(df: DataFrame): DataFrame =
-      if (cache) df.localCheckpoint(true) else df
-    val shD = mat(DedupQueries.withSizes(DedupQueries.shinglesOf(nd)))
-    val bD = mat(DedupQueries.minhashBandsOf(
-      DedupQueries.minhashSigFrom(shD.select(col("doc_id"), col("s")))))
-    val tD = mat(graft.queries.MultimodalQueries.tileRowsOf(nd))
-    (ids, shD, bD, tD)
+    val maxBytes = nd.sparkSession.conf.get("graft.compose.cacheMaxBytes",
+      ComposeCacheMaxBytes.toString).toLong
+    val cache = nd.agg(coalesce(sum(length(col("text"))), lit(0L)))
+      .head().getLong(0) <= maxBytes
+    val mat: DataFrame => DataFrame =
+      if (cache) _.localCheckpoint(true) else identity
+    val (shD, bD) = DedupIndexLayout.signaturePass(nd, mat)
+    DeltaFrames(ids, shD, bD,
+      mat(graft.queries.MultimodalQueries.tileRowsOf(nd)))
   }
 
-  /** [[checkDelta]] with the delta's shingle/band and signature/tile
-    * passes PRECOMPUTED — the seam [[ingestAndCurate]] uses so one
-    * snapshot defines each per-delta frame once across the gate check
-    * AND the curated refresh. `nd` and `ids` are always materialized
-    * (localCheckpoint); `shD`/`bD`/`tD` are either materialized
-    * (deltas within [[ComposeCacheMaxBytes]]: each pass paid once) or
-    * lazy-but-deterministic recomputations from the checkpointed `nd`
-    * (bulk deltas: each consumer re-derives them fused into its own
-    * codegen pipeline — same content either way, [[deltaFrames]]). */
+  /** [[checkDelta]] with the delta's [[DeltaFrames]] PRECOMPUTED — the
+    * seam [[ingestAndCurate]] uses so one snapshot defines each
+    * per-delta frame once across the gate check AND the curated
+    * refresh. `contamScan` forces the corpus-scan decontamination form
+    * on a sidecar-equipped prefix (the specs' equality twin). */
   private[sources] def checkDeltaWith(spark: SparkSession, dir: String,
-      prefix: String, nd: DataFrame, ids: DataFrame, shD: DataFrame,
-      bD: DataFrame, tD: DataFrame, newVecs: DataFrame,
-      minCosine: Double): DataFrame = {
+      prefix: String, nd: DataFrame, f: DeltaFrames, newVecs: DataFrame,
+      minCosine: Double, contamScan: Boolean = false): DataFrame = {
+    val DeltaFrames(ids, shD, bD, tD) = f
     def hitsOf(pairs: DataFrame, flag: String): DataFrame =
       pairs.select(col("doc_a").as("doc_id"))
         .unionByName(pairs.select(col("doc_b").as("doc_id")))
@@ -219,12 +190,9 @@ object IngestGate {
     // inverted sidecar when the gate build wrote one (the scan-pruned,
     // shuffle-free plan — ContamSidecarSpec pins it byte-equal to the
     // corpus-scan form below, which remains the pre-sidecar
-    // deployments' path and the bench A/B leg
-    // (`graft.contam.sidecar=false` / SPARK_GRAFT_CONTAM_SIDECAR)).
-    val useCm =
-      spark.conf.get("graft.contam.sidecar",
-        sys.env.getOrElse("SPARK_GRAFT_CONTAM_SIDECAR", "true")).toBoolean &&
-        spark.catalog.tableExists(DedupIndexLayout.cmTable(s"${prefix}_dd"))
+    // deployments' path).
+    val useCm = !contamScan &&
+      spark.catalog.tableExists(DedupIndexLayout.cmTable(s"${prefix}_dd"))
     val trainIds =
       nd.filter(graft.queries.DedupQueries.isTrainOf).select(col("doc_id"))
     val cHits = (if (useCm)
@@ -237,7 +205,7 @@ object IngestGate {
         BucketedTables.read(spark, s"${prefix}_dd_shingles")
           .join(broadcast(ids), Seq("doc_id"), "left_anti"),
         shD,
-        BucketedTables.read(spark, s"${prefix}_split")
+        BucketedTables.read(spark, Split.name(prefix))
           .join(broadcast(ids), Seq("doc_id"), "left_anti"),
         trainIds))
       .withColumn("eval_contam", lit(1L))
@@ -264,50 +232,29 @@ object IngestGate {
           col("eval_contam") === 0L).as("train_ok"))
   }
 
-  /** File the batch into all three indexes — each append idempotent
-    * under retries via its layout's own anti-join discipline. */
+  /** File the batch into all three indexes and the split table — each
+    * append idempotent under retries via its layout's own discipline. */
   def appendDelta(spark: SparkSession, prefix: String, newDocs: DataFrame,
       newVecs: DataFrame, buckets: Int = 8): Unit = {
-    DedupIndexLayout.appendDeltaDocs(spark, s"${prefix}_dd", newDocs, buckets)
-    MediaIndexLayout.appendDeltaDocs(spark, s"${prefix}_mm", newDocs, buckets)
-    appendDeltaRest(spark, prefix, newDocs, newVecs, buckets)
+    val nd = newDocs.dropDuplicates("doc_id").localCheckpoint(true)
+    appendDeltaFrom(spark, prefix, nd, deltaFrames(nd), newVecs, buckets)
   }
 
-  /** [[appendDelta]] with the text index's shingle/band passes and the
-    * media index's signature/tile pass PRECOMPUTED — the
-    * [[ingestAndCurate]] leg. */
+  /** [[appendDelta]] off the precomputed [[DeltaFrames]] of the
+    * distinct, materialized `nd`. The ANN tier has no shareable
+    * per-delta frame: the check consumes the delta as QUERIES
+    * (probe-side centroid distances) while the append files the
+    * delta's cell assignment + PQ codes. */
   private def appendDeltaFrom(spark: SparkSession, prefix: String,
-      newDocs: DataFrame, ids: DataFrame, shD: DataFrame, bD: DataFrame,
-      tD: DataFrame, newVecs: DataFrame, buckets: Int): Unit = {
-    DedupIndexLayout.appendDeltaDocsFrom(spark, s"${prefix}_dd", ids, shD,
-      bD, buckets,
-      Some(newDocs.dropDuplicates("doc_id").select(col("doc_id"),
-        graft.queries.DedupQueries.isTrainOf.as("is_train"))))
-    MediaIndexLayout.appendDeltaDocsFrom(spark, s"${prefix}_mm", ids, tD,
+      nd: DataFrame, f: DeltaFrames, newVecs: DataFrame, buckets: Int): Unit = {
+    DedupIndexLayout.appendDeltaDocsFrom(spark, s"${prefix}_dd", f.ids, f.shD,
+      f.bD, buckets, Some(DedupIndexLayout.splitOf(nd)))
+    MediaIndexLayout.appendDeltaDocsFrom(spark, s"${prefix}_mm", f.ids, f.tD,
       buckets)
-    appendDeltaRest(spark, prefix, newDocs, newVecs, buckets)
-  }
-
-  /** The vector/split legs of [[appendDelta]]. The ANN tier has no
-    * shareable per-delta frame: the check consumes the delta as
-    * QUERIES (probe-side centroid distances) while the append files
-    * the delta's cell assignment + PQ codes — different computations,
-    * both centroid-broadcast-bounded. */
-  private def appendDeltaRest(spark: SparkSession, prefix: String,
-      newDocs: DataFrame, newVecs: DataFrame, buckets: Int): Unit = {
     AnnIndexLayout.appendDeltaVectors(spark, s"${prefix}_ann", newVecs,
       buckets)
-    val nd = newDocs.dropDuplicates("doc_id")
-    BucketedTables.appendBucketed(
-      nd.select(col("doc_id"),
-          graft.queries.DedupQueries.isTrainOf.as("is_train"))
-        .join(BucketedTables.read(spark, s"${prefix}_split")
-            .select(col("doc_id"))
-            .join(broadcast(nd.select(col("doc_id"))), Seq("doc_id"),
-              "left_semi").distinct(),
-          Seq("doc_id"), "left_anti"),
-      s"${prefix}_split", "doc_id", buckets)
-    spark.catalog.refreshTable(s"${prefix}_split")
+    DeltaIndex.appendAntiJoined(spark, prefix, Split,
+      DedupIndexLayout.splitOf(nd), buckets, Some(f.ids))
   }
 
   /** The per-source rollup of [[checkDelta]]'s verdicts — the exact
@@ -371,28 +318,23 @@ object IngestGate {
   def ingestAndCurate(spark: SparkSession, dir: String, gatePrefix: String,
       curatedPrefix: String, deltaDocs: DataFrame, deltaVecs0: DataFrame,
       buckets: Int = 8, minCosine: Double = 0.4): DataFrame = {
-    // one prefix would alias the gate's `_dd`/`_split` tables onto the
-    // curated layout's — the gate's filing would silently change the
-    // refresh's dedup semantics instead of failing fast
-    require(gatePrefix != curatedPrefix,
-      s"gatePrefix and curatedPrefix must be distinct (both '$gatePrefix')")
+    distinctPrefixes(gatePrefix, curatedPrefix)
     val nd = deltaDocs.dropDuplicates("doc_id").localCheckpoint(true)
-    val (ids, shD, bD, tD) = deltaFrames(nd)
+    val f = deltaFrames(nd)
     // pinned: consumed by the gate check, the ANN filing, and the
     // curated cosine-state refresh
     val deltaVecs = deltaVecs0.localCheckpoint(true)
-    val verdicts = checkDeltaWith(spark, dir, gatePrefix, nd, ids, shD, bD,
-      tD, deltaVecs, minCosine).localCheckpoint(true)
-    appendDeltaFrom(spark, gatePrefix, nd, ids, shD, bD, tD, deltaVecs,
-      buckets)
+    val verdicts = checkDeltaWith(spark, dir, gatePrefix, nd, f, deltaVecs,
+      minCosine).localCheckpoint(true)
+    appendDeltaFrom(spark, gatePrefix, nd, f, deltaVecs, buckets)
     // a [[buildWithCurated]] deployment shares the gate's `_dd` index:
     // the append above already filed the delta there, so the refresh
     // skips its (idempotent, but ledger-fallback-priced) re-filing
     val sharedDd =
       CuratedCorpusLayout.ddPrefixOf(spark, curatedPrefix) ==
         s"${gatePrefix}_dd"
-    CuratedCorpusLayout.refreshWith(spark, dir, curatedPrefix, nd, ids, shD,
-      bD, deltaVecs, buckets, ddFiled = sharedDd)
+    CuratedCorpusLayout.refreshWith(spark, dir, curatedPrefix, nd, f.ids,
+      f.shD, f.bD, deltaVecs, buckets, ddFiled = sharedDd)
     verdicts
   }
 
@@ -412,21 +354,17 @@ object IngestGate {
       buckets: Int = 8, checkpoint: Option[String] = None,
       minCosine: Double = 0.4)(sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(gatePrefix != curatedPrefix,
-      s"gatePrefix and curatedPrefix must be distinct (both '$gatePrefix')")
-    val w = assetStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // verdicts are materialized BEFORE any filing inside
-        // ingestAndCurate (the check-before-append discipline), so
-        // handing them to the sink after the call loses nothing
-        sink(ingestAndCurate(spark, dir, gatePrefix, curatedPrefix,
-          batch.select(col("doc_id"), col("source"), col("text")),
-          batch.filter(col("embedding").isNotNull)
-            .select(col("doc_id").as("vec_id"), col("embedding")),
-          buckets, minCosine), batchId)
-      }
-      .start()
+    distinctPrefixes(gatePrefix, curatedPrefix)
+    DeltaIndex.stream(assetStream, checkpoint) { (batch, batchId) =>
+      // verdicts are materialized BEFORE any filing inside
+      // ingestAndCurate (the check-before-append discipline), so
+      // handing them to the sink after the call loses nothing
+      sink(ingestAndCurate(spark, dir, gatePrefix, curatedPrefix,
+        batch.select(col("doc_id"), col("source"), col("text")),
+        batch.filter(col("embedding").isNotNull)
+          .select(col("doc_id").as("vec_id"), col("embedding")),
+        buckets, minCosine), batchId)
+    }
   }
 
   /** CONTINUOUS composite ingest: a stream of assets — (doc_id,
@@ -452,40 +390,23 @@ object IngestGate {
       monitor: Option[graft.streaming.AnnStalenessMonitor] = None,
       minCosine: Double = 0.4)(
       sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = assetStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val docsB = batch.select(col("doc_id"), col("source"), col("text"))
-        // materialized: consumed by the check, the ANN filing, and the
-        // monitor tick (whose emptiness probe then reads checkpointed
-        // partitions instead of re-running the batch filter)
-        val vecsB = batch.filter(col("embedding").isNotNull)
-          .select(col("doc_id").as("vec_id"), col("embedding"))
-          .localCheckpoint(true)
-        // one set of materialized delta frames serves the check AND
-        // the filing — the per-batch shingle and graft_psig passes are
-        // paid once, not per consumer (the ingestAndCurate discipline)
-        val nd = docsB.dropDuplicates("doc_id").localCheckpoint(true)
-        val (ids, shD, bD, tD) = deltaFrames(nd)
-        sink(checkDeltaWith(spark, dir, prefix, nd, ids, shD, bD, tD,
-          vecsB, minCosine), batchId)
-        appendDeltaFrom(spark, prefix, nd, ids, shD, bD, tD, vecsB, buckets)
-        monitor.foreach { m =>
-          // a batch with NO embedded assets has nothing to probe
-          // freshness with — ticking anyway would raise on the NULL
-          // avg_qerr and (spuriously) log a failed audit every such
-          // batch, skipping the occupancy-skew check too
-          try if (!vecsB.isEmpty) m.check(spark, s"${prefix}_ann", vecsB,
-            atMs = System.currentTimeMillis())
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[ann-staleness] gate audit tick failed " +
-                  s"(ingest unaffected): $e")
-          }
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(assetStream, checkpoint) { (batch, batchId) =>
+      val docsB = batch.select(col("doc_id"), col("source"), col("text"))
+      // materialized: consumed by the check, the ANN filing, and the
+      // monitor tick (whose emptiness probe then reads checkpointed
+      // partitions instead of re-running the batch filter)
+      val vecsB = batch.filter(col("embedding").isNotNull)
+        .select(col("doc_id").as("vec_id"), col("embedding"))
+        .localCheckpoint(true)
+      // one set of materialized delta frames serves the check AND the
+      // filing — the per-batch shingle and graft_psig passes are paid
+      // once, not per consumer (the ingestAndCurate discipline)
+      val nd = docsB.dropDuplicates("doc_id").localCheckpoint(true)
+      val f = deltaFrames(nd)
+      sink(checkDeltaWith(spark, dir, prefix, nd, f, vecsB, minCosine),
+        batchId)
+      appendDeltaFrom(spark, prefix, nd, f, vecsB, buckets)
+      DeltaIndex.auditTick(spark, monitor, s"${prefix}_ann", vecsB)
+    }
 }

@@ -54,6 +54,11 @@ object IngestLedger {
 
   def table(prefix: String): String = s"${prefix}_ids"
 
+  /** Write the ledger of a fresh build: every key in the 1-column
+    * `ids` is fully filed by definition. */
+  def create(ids: DataFrame, prefix: String, buckets: Int): Unit =
+    BucketedTables.writeBucketed(ids.toDF("id"), table(prefix), "id", buckets)
+
   /** The begin-of-append split: `dirtyIds` (delta keys already in the
     * ledger, delta-sized, materialized — broadcast it into the
     * fallback anti-joins) and its count for the happy-path
@@ -105,13 +110,12 @@ object IngestLedger {
     * keeps describing exactly the keys whose rows survive in the data
     * tables. Call BEFORE `Tombstones.clear`. No-op for a prefix that
     * has never appended (no ledger yet). `tombstonePrefix` names where
-    * the layout keeps its tombstones when that differs from the ledger
-    * prefix (the ANN layout's ledger is generation-scoped while its
-    * tombstones are logical — they must survive rebuilds). */
+    * the layout keeps its tombstones (the ANN layout's ledger is
+    * generation-scoped while its tombstones are logical — they must
+    * survive rebuilds). */
   def compact(spark: SparkSession, prefix: String, buckets: Int,
-      tombstonePrefix: String = null): Unit =
+      tombstonePrefix: String): Unit =
     if (spark.catalog.tableExists(table(prefix)))
       BucketedTables.compact(spark, table(prefix), "id", buckets,
-        df => Tombstones.filter(spark,
-          Option(tombstonePrefix).getOrElse(prefix), df, "id"))
+        df => Tombstones.filter(spark, tombstonePrefix, df, "id"))
 }

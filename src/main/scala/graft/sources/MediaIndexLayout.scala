@@ -7,7 +7,7 @@ import graft.queries.MultimodalQueries
 import graft.util.Tables
 
 /** Build-once / check-many persistence for PERCEPTUAL media dedup —
-  * [[DedupIndexLayout]]'s discipline applied to the multimodal tier:
+  * the [[DeltaIndex]] lifecycle applied to the multimodal tier:
   * instead of re-signing the whole asset store per snapshot
   * (`mm_near_dup_pairs` recomputes every tile signature per run), the
   * corpus's tile rows are persisted once and each delta of NEW media
@@ -29,6 +29,8 @@ import graft.util.Tables
   */
 object MediaIndexLayout {
 
+  private val Tiles = DeltaIndex.Table("tiles", "tile", "doc_id")
+
   def build(spark: SparkSession, dir: String, prefix: String,
       buckets: Int = 8, where: Column = lit(true)): Unit =
     buildDocs(spark, prefix,
@@ -39,43 +41,32 @@ object MediaIndexLayout {
   def buildDocs(spark: SparkSession, prefix: String, docs: DataFrame,
       buckets: Int = 8): Unit = {
     val d = docs.dropDuplicates("doc_id")
-    BucketedTables.writeBucketed(
-      MultimodalQueries.tileRowsOf(d),
-      s"${prefix}_tiles", "tile", buckets)
+    BucketedTables.writeBucketed(MultimodalQueries.tileRowsOf(d),
+      Tiles.name(prefix), Tiles.key, buckets)
     // the ingest ledger covers every INPUT doc (a tile-less asset is
     // fully filed by filing nothing), so re-sends skip it either way
-    BucketedTables.writeBucketed(d.select(col("doc_id").as("id")),
-      IngestLedger.table(prefix), "id", buckets)
+    IngestLedger.create(d.select(col("doc_id")), prefix, buckets)
   }
 
-  /** Sign + tile ONLY the given media and append. Idempotent under
+  /** Sign + tile ONLY the given media and append — idempotent under
     * retries and replays via the [[IngestLedger]] intent-first
-    * protocol: new docs append with no scan of the tile table; only a
-    * replayed/retried (dirty) subset pays the exact per-table doc_id
-    * anti-join. Within-batch duplicates collapse first. */
+    * protocol ([[DeltaIndex.appendLedgered]]). Within-batch duplicates
+    * collapse first. */
   def appendDeltaDocs(spark: SparkSession, prefix: String,
       docs: DataFrame, buckets: Int = 8): Unit = {
-    val d = docs.dropDuplicates("doc_id")
-    appendDeltaDocsFrom(spark, prefix, d.select(col("doc_id")),
-      MultimodalQueries.tileRowsOf(d), buckets)
+    val d = docs.dropDuplicates("doc_id").localCheckpoint(true)
+    appendDeltaDocsFrom(spark, prefix,
+      d.select(col("doc_id")).localCheckpoint(true),
+      MultimodalQueries.tileRowsOf(d).localCheckpoint(true), buckets)
   }
 
   /** [[appendDeltaDocs]] with the delta's signature/tile pass
     * PRECOMPUTED — the composed snapshot path files the same
     * materialized tile rows the gate check consumed, so a snapshot
-    * pays the `graft_psig` kernel exactly once. Same ledger discipline
-    * as the public entry. */
+    * pays the `graft_psig` kernel exactly once. */
   private[sources] def appendDeltaDocsFrom(spark: SparkSession,
-      prefix: String, ids: DataFrame, tD: DataFrame, buckets: Int): Unit = {
-    val split = IngestLedger.begin(spark, prefix, ids, buckets,
-      BucketedTables.read(spark, s"${prefix}_tiles").select(col("doc_id")))
-    BucketedTables.appendBucketed(
-      IngestLedger.filed(tD, "doc_id", split,
-        BucketedTables.read(spark, s"${prefix}_tiles")
-          .select(col("doc_id")).distinct()),
-      s"${prefix}_tiles", "tile", buckets)
-    spark.catalog.refreshTable(s"${prefix}_tiles")
-  }
+      prefix: String, ids: DataFrame, tD: DataFrame, buckets: Int): Unit =
+    DeltaIndex.appendLedgered(spark, prefix, ids, buckets, Seq(Tiles -> tD))
 
   /** Check a delta of NEW media against corpus + delta: verified
     * (media_format, doc_a, doc_b, hamming, same_bytes) near-dup pairs
@@ -105,39 +96,29 @@ object MediaIndexLayout {
     * check. */
   private[sources] def dedupDeltaFrom(spark: SparkSession, prefix: String,
       ids: DataFrame, tD: DataFrame): DataFrame = {
-    val tiles = Tombstones.filter(spark, prefix,
-      BucketedTables.read(spark, s"${prefix}_tiles"), "doc_id")
+    val tiles = DeltaIndex.live(spark, prefix, prefix, Tiles)
     val maxDocs = ScanPrune.maxDeltaDocs(spark)
     val tilesIn =
-      if (maxDocs > 0L && ids.count() <= maxDocs) {
-        val tvals = tD.select(col("tile")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        ScanPrune.ensureInPushdown(spark, tvals.length)
-        ScanPrune.inSet(tiles, "tile", tvals)
-      } else tiles
+      if (maxDocs > 0L && ids.count() <= maxDocs)
+        ScanPrune.pushedInSet(spark, tiles, "tile",
+          tD.select(col("tile")).distinct())
+      else tiles
     MultimodalQueries.mediaDeltaPairsCoreFrom(tilesIn, ids, tD)
   }
 
-  /** CONTINUOUS media ingest: check-then-append per micro-batch —
-    * at-least-once pair emission over an exactly-once index, the
-    * [[DedupIndexLayout.ingestStream]] contract verbatim. */
+  /** CONTINUOUS media ingest: check-then-append per micro-batch off
+    * one materialized tile pass ([[DeltaIndex]]'s contract). */
   def ingestStream(spark: SparkSession, prefix: String,
       docStream: DataFrame, buckets: Int = 8,
       checkpoint: Option[String] = None)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one materialized graft_psig signature/tile pass serves the
-        // check AND the filing — previously each leg re-signed the batch
-        val d = batch.dropDuplicates("doc_id").localCheckpoint(true)
-        val ids = d.select(col("doc_id")).localCheckpoint(true)
-        val tD = MultimodalQueries.tileRowsOf(d).localCheckpoint(true)
-        sink(dedupDeltaFrom(spark, prefix, ids, tD), batchId)
-        appendDeltaDocsFrom(spark, prefix, ids, tD, buckets)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(docStream, checkpoint) { (batch, batchId) =>
+      val d = batch.dropDuplicates("doc_id").localCheckpoint(true)
+      val ids = d.select(col("doc_id")).localCheckpoint(true)
+      val tD = MultimodalQueries.tileRowsOf(d).localCheckpoint(true)
+      sink(dedupDeltaFrom(spark, prefix, ids, tD), batchId)
+      appendDeltaDocsFrom(spark, prefix, ids, tD, buckets)
+    }
 
   /** Right-to-be-forgotten: tombstone the ids (immediate exclusion
     * from checks), physical erasure at the next [[compact]]. */
@@ -145,33 +126,11 @@ object MediaIndexLayout {
       docIds: DataFrame): Unit =
     Tombstones.purge(spark, prefix, docIds)
 
-  /** Coverage gauge — the [[DedupIndexLayout.stalenessMetrics]]
-    * contract for the tile index: live assets vs perceptually-indexed
-    * assets (tombstones excluded), coverage ppm, tombstone backlog. */
+  /** Coverage gauge ([[DeltaIndex.coverage]]) over the tile index. */
   def stalenessMetrics(spark: SparkSession, dir: String,
-      prefix: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    val live = Tables.load(spark, dir, "documents")
-      .agg(count(lit(1)).as("n_docs_live"))
-    val indexed = Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${prefix}_tiles")
-          .select(col("doc_id")).distinct(), "doc_id")
-      .agg(count(lit(1)).as("n_docs_indexed"))
-    val tomb = Tombstones.ids(spark, prefix)
-      .agg(count(lit(1)).as("n_tombstoned"))
-    live.crossJoin(broadcast(indexed)).crossJoin(broadcast(tomb))
-      .select(col("n_docs_live"), col("n_docs_indexed"),
-        round(col("n_docs_indexed").cast("double") /
-          col("n_docs_live").cast("double") * 1e6)
-          .cast(LongType).as("coverage_ppm"),
-        col("n_tombstoned"))
-  }
+      prefix: String): DataFrame =
+    DeltaIndex.coverage(spark, dir, prefix, Tiles)
 
-  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit = {
-    BucketedTables.compact(spark, s"${prefix}_tiles", "tile", buckets,
-      df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    IngestLedger.compact(spark, prefix, buckets)
-    Tombstones.clear(spark, prefix)
-  }
+  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, prefix, Seq(Tiles), buckets)
 }

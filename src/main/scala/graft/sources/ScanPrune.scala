@@ -131,6 +131,16 @@ private[graft] object ScanPrune {
     if (spark.conf.get(k, "10").toInt < target) spark.conf.set(k, target.toString)
   }
 
+  /** [[inSet]] over the collected 1-column `values` frame, with the
+    * parquet IN threshold raised so all of them are pushed
+    * ([[ensureInPushdown]]). */
+  def pushedInSet(spark: SparkSession, df: DataFrame, key: String,
+      values: DataFrame): DataFrame = {
+    val vs = values.collect().map(_.get(0)).toSeq
+    ensureInPushdown(spark, vs.length)
+    inSet(df, key, vs)
+  }
+
   /** `df` restricted to rows whose `key` ∈ `values` — the prunable IN
     * literal filter. The empty set degenerates to `false` (an empty
     * delta matches nothing; `isin()` with zero arguments is not

@@ -8,7 +8,7 @@ import graft.queries.TextQueries
 import graft.util.Tables
 
 /** Build-once / query-many persistence for the BM25 inverted index —
-  * the [[AnnIndexLayout]] discipline applied to text retrieval.
+  * the [[DeltaIndex]] lifecycle applied to text retrieval.
   *
   * The online query (`txt_bm25_topk`) re-tokenizes the corpus and
   * rebuilds postings/df/dl/idf on every invocation; all of it is a
@@ -50,8 +50,10 @@ import graft.util.Tables
   */
 object TextIndexLayout {
 
+  private val Postings = DeltaIndex.Table("postings", "term", "doc_id")
+
   /** The index's table set — one complete copy per generation. */
-  private val IndexTables = Seq("vocab", "stats", "postings")
+  private val IndexTables = Seq("vocab", "stats", Postings.suffix)
 
   /** The PHYSICAL prefix of the live generation ([[GenerationPointer]]
     * — this index's three tables are `<livePrefix>_vocab` /
@@ -61,16 +63,14 @@ object TextIndexLayout {
   def livePrefix(spark: SparkSession, prefix: String): String =
     GenerationPointer.livePrefix(spark, prefix)
 
-  /** Generation-or-legacy resolution: a prefix built by [[build]]
-    * resolves through the `_livegen` pointer; a pre-pointer prefix
-    * (tables at the logical names, no view) keeps resolving as
-    * itself, so existing deployments read on unchanged until their
-    * next rebuild publishes generationally. */
   private def phys(spark: SparkSession, prefix: String): String =
-    if (spark.catalog.tableExists(GenerationPointer.view(prefix)))
-      GenerationPointer.livePrefix(spark, prefix)
-    else if (spark.catalog.tableExists(s"${prefix}_postings")) prefix
-    else GenerationPointer.livePrefix(spark, prefix) // loud: nothing built
+    GenerationPointer.physOrLegacy(spark, prefix, Postings.suffix)
+
+  /** The live generation's frozen corpus stats, named for comparison
+    * with a live-corpus measurement. */
+  private def frozenStats(spark: SparkSession, pp: String): DataFrame =
+    spark.table(s"${pp}_stats").select(col("n_docs").as("n_docs_frozen"),
+      col("avgdl").as("avgdl_frozen"))
 
   private def docsOf(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
@@ -97,70 +97,43 @@ object TextIndexLayout {
   /** [[build]] with a fault-injection hook for the publish-crash specs
     * (`faultHook` is called at the named points and may throw).
     *
-    * GENERATIONAL rebuild ([[GenerationPointer]]): vocab, stats, and
-    * postings are fully written under the next generation's prefix
-    * FIRST — a rebuild between two per-table swaps used to expose a
-    * reader to new postings against old idf geometry (the mixed-set
-    * window the ANN layout closed in round 15) — then the `_livegen`
-    * pointer flips in ONE atomic catalog operation and only afterwards
-    * does the superseded generation drop. A crash before the flip
-    * leaves the old index complete and serving; after it, the new one;
-    * never a mix (TextPublishSpec kills the build on both sides of the
-    * flip). A rebuild recaptures the frozen geometry, so
-    * [[stalenessMetrics]]/[[driftAudit]] re-baseline at the flip by
-    * construction — they resolve the live generation's vocab/stats. */
+    * GENERATIONAL rebuild ([[GenerationPointer.rebuild]]): vocab,
+    * stats and postings are written under the next generation and
+    * published by one pointer flip, so no reader ever scores new
+    * postings against old idf geometry (TextPublishSpec kills the
+    * build on both sides of the flip). A rebuild recaptures the frozen
+    * geometry, so [[stalenessMetrics]]/[[driftAudit]] re-baseline at
+    * the flip by construction. */
   private[sources] def buildImpl(spark: SparkSession, dir: String,
       prefix: String, buckets: Int, where: Column, dropSuperseded: Boolean,
-      faultHook: String => Unit): Unit = {
-    val cur = GenerationPointer.liveGen(spark, prefix)
-    val (tp, nextGen) = GenerationPointer.nextPrefix(spark, prefix)
-    GenerationPointer.sweepStale(spark, prefix)
-    val perDoc = TextQueries.bm25TermGrain(docsOf(spark, dir).filter(where))
-      .persist()
-    perDoc.count()
-    try {
-      val dl = TextQueries.bm25DocLens(perDoc)
-      val (vocab, stats) = TextQueries.bm25Vocab(perDoc, dl)
-      BucketedTables.dropWithOrphanDir(spark, s"${tp}_vocab")
-      vocab.write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${tp}_vocab")
-      BucketedTables.dropWithOrphanDir(spark, s"${tp}_stats")
-      stats.write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${tp}_stats")
-      // re-read the PERSISTED vocabulary so the postings are provably a
-      // function of the frozen geometry (and the plan reuses one scan)
-      val frozen = BucketedTables.read(spark, s"${tp}_vocab")
-      BucketedTables.writeBucketed(
-        TextQueries.bm25Postings(perDoc, frozen, dl),
-        s"${tp}_postings", "term", buckets)
-    } finally perDoc.unpersist()
-    faultHook("before-publish")
-    GenerationPointer.publish(spark, prefix, nextGen)
-    faultHook("after-publish")
-    if (dropSuperseded) {
-      cur.foreach(g =>
-        GenerationPointer.dropGeneration(spark, prefix, g, IndexTables))
-      // a pre-pointer (legacy) layout's logical-name tables are
-      // superseded by the first generational publish exactly like an
-      // old generation (tombstones are NOT index tables and survive).
-      // Unconditional drop-if-exists, not `cur.isEmpty`-gated: a FIRST
-      // generational build crashed between publish and this drop would
-      // otherwise leak the legacy tables forever (every later build
-      // sees cur.nonEmpty); re-running the drop is a no-op when they
-      // are already gone.
-      IndexTables.foreach(t =>
-        BucketedTables.dropWithOrphanDir(spark, s"${prefix}_$t"))
+      faultHook: String => Unit): Unit =
+    GenerationPointer.rebuild(spark, prefix, IndexTables, dropSuperseded,
+        dropLegacy = true, faultHook) { tp =>
+      val perDoc = TextQueries.bm25TermGrain(docsOf(spark, dir).filter(where))
+        .persist()
+      perDoc.count()
+      try {
+        val dl = TextQueries.bm25DocLens(perDoc)
+        val (vocab, stats) = TextQueries.bm25Vocab(perDoc, dl)
+        BucketedTables.dropWithOrphanDir(spark, s"${tp}_vocab")
+        vocab.write.mode("overwrite").format("parquet")
+          .saveAsTable(s"${tp}_vocab")
+        BucketedTables.dropWithOrphanDir(spark, s"${tp}_stats")
+        stats.write.mode("overwrite").format("parquet")
+          .saveAsTable(s"${tp}_stats")
+        // re-read the PERSISTED vocabulary so the postings are provably
+        // a function of the frozen geometry (and the plan reuses one scan)
+        val frozen = BucketedTables.read(spark, s"${tp}_vocab")
+        BucketedTables.writeBucketed(
+          TextQueries.bm25Postings(perDoc, frozen, dl),
+          Postings.name(tp), Postings.key, buckets)
+      } finally perDoc.unpersist()
     }
-  }
 
-  /** Sweep stale generations — the [[AnnIndexLayout
-    * .sweepStaleGenerations]] contract for this layout: keeps the live
-    * generation plus the `keepGenerations` most recent below it;
-    * `keepGenerations = 0` is the deferred-drop deployment's explicit
-    * post-latency reclaim, which also drops a pre-pointer deployment's
-    * logical-name index tables once a generation is published. The
-    * runnable sequence is the deferred-drop recipe in
-    * [[GenerationPointer]]'s scaladoc. */
+  /** Sweep stale generations ([[AnnIndexLayout.sweepStaleGenerations]]'s
+    * contract); `keepGenerations = 0` also drops a pre-pointer
+    * deployment's logical-name index tables once a generation is
+    * published. */
   def sweepStaleGenerations(spark: SparkSession, prefix: String,
       keepGenerations: Int = 1): Unit =
     GenerationPointer.sweepStale(spark, prefix, keepGenerations, IndexTables)
@@ -201,14 +174,9 @@ object TextIndexLayout {
     // within-batch duplicates would pass the persisted-postings
     // anti-join together and double-file their term rows
     val perDoc = TextQueries.bm25TermGrain(docs.dropDuplicates("doc_id"))
-    BucketedTables.appendBucketed(
-      TextQueries.bm25Postings(perDoc, frozen, TextQueries.bm25DocLens(perDoc))
-        .join(BucketedTables.read(spark, s"${pp}_postings")
-          .select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"),
-      s"${pp}_postings", "term", buckets)
-    // see AnnIndexLayout.appendDeltaVectors: a foreachBatch clone's
-    // write does not invalidate the serving session's file listing
-    spark.catalog.refreshTable(s"${pp}_postings")
+    DeltaIndex.appendAntiJoined(spark, pp, Postings,
+      TextQueries.bm25Postings(perDoc, frozen, TextQueries.bm25DocLens(perDoc)),
+      buckets)
   }
 
   /** CONTINUOUS index maintenance: a stream of (doc_id, text) rows
@@ -222,33 +190,18 @@ object TextIndexLayout {
   def maintainStream(spark: SparkSession, prefix: String,
       docStream: DataFrame, buckets: Int = 8,
       checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docStream.writeStream
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, _: Long) =>
-        appendDeltaDocs(spark, prefix, batch, buckets)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    DeltaIndex.stream(docStream, checkpoint) { (batch, _) =>
+      appendDeltaDocs(spark, prefix, batch, buckets)
+    }
 
-  /** Maintenance pass for a delta-accumulating index: every
-    * [[appendDelta]] adds one file set per bucket; rewrite the
-    * postings back to ONE file per bucket ([[BucketedTables.compact]]'s
-    * write-aside + checked-rename swap), ERASING any tombstoned
-    * documents' rows in the same rewrite, then clear the tombstone
-    * list — after which the purged data is physically gone and the
-    * doc_id may re-enter via a future delta. Serve results are
-    * byte-identical before and after (CompactIndexSpec;
-    * IndexPurgeSpec for the purge interaction). Run with index
-    * writers quiesced per table by the [[BucketedTables]] lock (same
-    * JVM; cross-JVM writers are outside the single-writer contract). */
-  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit = {
-    // postings live at the generation grain; tombstones at the logical
-    // prefix (they must keep filtering across rebuilds)
-    BucketedTables.compact(spark, s"${phys(spark, prefix)}_postings", "term",
-      buckets, df => Tombstones.filter(spark, prefix, df, "doc_id"))
-    Tombstones.clear(spark, prefix)
-  }
+  /** [[DeltaIndex.compact]] of the postings: erases tombstoned
+    * documents' rows, after which the doc_id may re-enter via a future
+    * delta. Serve results are byte-identical before and after
+    * (CompactIndexSpec; IndexPurgeSpec for the purge interaction). */
+  def compact(spark: SparkSession, prefix: String, buckets: Int = 8): Unit =
+    DeltaIndex.compact(spark, prefix, phys(spark, prefix), Seq(Postings),
+      buckets)
 
   /** Right-to-be-forgotten against the SERVING index: tombstone the
     * given doc_ids — [[serve]]/[[servePrf]] exclude them from results
@@ -278,9 +231,7 @@ object TextIndexLayout {
   def serve(spark: SparkSession, prefix: String, queries: DataFrame,
       excludeSelf: Boolean = false): DataFrame =
     TextQueries.bm25Score(queryTerms(queries),
-      Tombstones.filter(spark, prefix,
-        BucketedTables.read(spark, s"${phys(spark, prefix)}_postings"),
-        "doc_id"),
+      DeltaIndex.live(spark, prefix, phys(spark, prefix), Postings),
       excludeSelf)
 
   /** ONLINE serving: a stream of (q_id, text) queries answered from
@@ -294,11 +245,9 @@ object TextIndexLayout {
       queryStream: DataFrame, excludeSelf: Boolean = false)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(serve(spark, prefix, batch, excludeSelf), batchId)
-      }
-      .start()
+    DeltaIndex.stream(queryStream) { (batch, batchId) =>
+      sink(serve(spark, prefix, batch, excludeSelf), batchId)
+    }
 
   /** Pseudo-relevance-feedback serving (RM3-style two-pass retrieval)
     * from the persisted index: run [[serve]], take each query's top
@@ -327,9 +276,7 @@ object TextIndexLayout {
       kFb: Int = 3, nExp: Int = 5,
       excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    val postings = Tombstones.filter(spark, prefix,
-      BucketedTables.read(spark, s"${phys(spark, prefix)}_postings"),
-      "doc_id")
+    val postings = DeltaIndex.live(spark, prefix, phys(spark, prefix), Postings)
     // qt is request-sized: recomputing the tokenize per consumer is
     // cheaper than owning cached blocks on a long-lived serving session
     val qt = queryTerms(queries)
@@ -419,11 +366,9 @@ object TextIndexLayout {
       count(lit(1)).as("n_docs_now"),
       (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
         .as("avgdl_now"))
-    val frozen = spark.table(s"${pp}_stats")
-      .select(col("n_docs").as("n_docs_frozen"),
-        col("avgdl").as("avgdl_frozen"))
     Tables.released(
-      mass.crossJoin(broadcast(now)).crossJoin(broadcast(frozen))
+      mass.crossJoin(broadcast(now))
+        .crossJoin(broadcast(frozenStats(spark, pp)))
         .select(
           round(col("oov").cast("double") / col("tot").cast("double") * 1e6)
             .cast(LongType).as("oov_mass_ppm"),
@@ -456,9 +401,6 @@ object TextIndexLayout {
       .join(vocabNow.select(col("term"), col("df").as("df_now")),
         Seq("term"), "full_outer")
       .na.fill(0L, Seq("df_frozen", "df_now"))
-    val frozenS = spark.table(s"${pp}_stats")
-      .select(col("n_docs").as("n_docs_frozen"),
-        col("avgdl").as("avgdl_frozen"))
     val nowS = statsNow
       .select(col("n_docs").as("n_docs_now"), col("avgdl").as("avgdl_now"))
     terms
@@ -466,7 +408,7 @@ object TextIndexLayout {
         abs(round(log((col("df_now").cast("double") + 1.0) /
           (col("df_frozen").cast("double") + 1.0)) * 1e6))
           .cast(LongType).as("drift_micro"))
-      .crossJoin(broadcast(frozenS))
+      .crossJoin(broadcast(frozenStats(spark, pp)))
       .crossJoin(broadcast(nowS))
       .orderBy(col("drift_micro").desc, col("term"))
       .limit(topK)

@@ -43,24 +43,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 class AlertMonitor(
     failuresPerMinute: Double = 5.0,
-    sustainMs: Long = 60000L,
+    protected val sustainMs: Long = 60000L,
     windowMs: Long = 60000L,
-    onlyQuery: Option[String] = None) extends StreamingQueryListener {
-
-  /** One alert state change: raised (firing=true) or cleared. */
-  final case class Transition(atMs: Long, firing: Boolean, ratePerMin: Double)
+    onlyQuery: Option[String] = None) extends StreamingQueryListener
+    with SustainedBreach[AlertMonitor.Transition] {
 
   private val samples = scala.collection.mutable.ArrayDeque.empty[(Long, Long)]
-  private var breachSinceMs: Option[Long] = None
-  private var history = Vector.empty[Transition]
   private var invalidTotal = 0L
-  @volatile private var isFiring = false
-
-  /** Is the alert currently raised? */
-  def firing: Boolean = isFiring
-
-  /** Raised/cleared transitions in arrival order. */
-  def transitions: Seq[Transition] = synchronized(history)
 
   /** Total invalid events observed since attach (the raw counter the
     * reference exports as events_failed_total). */
@@ -77,12 +66,8 @@ class AlertMonitor(
     samples.filterInPlace(_._1 > nowMs - windowMs)
     val ratePerMin =
       samples.iterator.map(_._2).sum * 60000.0 / windowMs.toDouble
-    breachSinceMs =
-      if (ratePerMin > failuresPerMinute) breachSinceMs.orElse(Some(nowMs))
-      else None
-    val nowFiring = breachSinceMs.exists(s => nowMs - s >= sustainMs)
-    if (nowFiring != isFiring) history :+= Transition(nowMs, nowFiring, ratePerMin)
-    isFiring = nowFiring
+    observe(nowMs, ratePerMin > failuresPerMinute)(
+      AlertMonitor.Transition(nowMs, _, ratePerMin))
   }
 
   /** Advance the evaluation clock with no new failures — what a
@@ -127,4 +112,10 @@ class AlertMonitor(
       record(atMs, om.get("graft_ingest").getAs[Long]("invalid_events"))
     }
   }
+}
+
+object AlertMonitor {
+
+  /** One alert state change: raised (firing=true) or cleared. */
+  final case class Transition(atMs: Long, firing: Boolean, ratePerMin: Double)
 }

@@ -27,31 +27,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class AnnStalenessMonitor(
     occSkewPpm: Long = 200000L,
     qerrRisePpm: Long = 250000L,
-    sustainMs: Long = 0L) {
-
-  /** One alert state change: raised (firing=true) or cleared. */
-  final case class Transition(atMs: Long, firing: Boolean,
-      occPpm: Long, qerrPpm: Long)
-
-  private var breachSinceMs: Option[Long] = None
-  private var history = Vector.empty[Transition]
-  @volatile private var isFiring = false
-
-  def firing: Boolean = isFiring
-
-  def transitions: Seq[Transition] = synchronized(history)
+    protected val sustainMs: Long = 0L)
+    extends SustainedBreach[AnnStalenessMonitor.Transition] {
 
   /** Record one audit observation and re-evaluate the rule. */
   def record(atMs: Long, occPpm: Long, qerrPpm: Long): Unit =
-    synchronized {
-      val breach = occPpm > occSkewPpm || qerrPpm > qerrRisePpm
-      breachSinceMs =
-        if (breach) breachSinceMs.orElse(Some(atMs)) else None
-      val nowFiring = breachSinceMs.exists(s => atMs - s >= sustainMs)
-      if (nowFiring != isFiring)
-        history :+= Transition(atMs, nowFiring, occPpm, qerrPpm)
-      isFiring = nowFiring
-    }
+    observe(atMs, occPpm > occSkewPpm || qerrPpm > qerrRisePpm)(
+      AnnStalenessMonitor.Transition(atMs, _, occPpm, qerrPpm))
 
   /** Run the geometry audit for `prefix` with `recentVecs` as the
     * freshness probe, record it at `atMs`, and return the measured
@@ -65,4 +47,11 @@ class AnnStalenessMonitor(
     record(atMs, occ, qerr)
     (occ, qerr)
   }
+}
+
+object AnnStalenessMonitor {
+
+  /** One alert state change: raised (firing=true) or cleared. */
+  final case class Transition(atMs: Long, firing: Boolean,
+      occPpm: Long, qerrPpm: Long)
 }

@@ -27,34 +27,16 @@ import org.apache.spark.sql.SparkSession
   * deployment tolerating a measured recall budget can raise it. */
 class GeometrySaturationMonitor(
     evictedPpmMax: Long = 0L,
-    sustainMs: Long = 0L) {
-
-  /** One alert state change: raised (firing=true) or cleared. */
-  final case class Transition(atMs: Long, firing: Boolean,
-      evictedPpm: Long, nSaturatedBuckets: Long)
-
-  private var breachSinceMs: Option[Long] = None
-  private var history = Vector.empty[Transition]
-  @volatile private var isFiring = false
-
-  def firing: Boolean = isFiring
-
-  def transitions: Seq[Transition] = synchronized(history)
+    protected val sustainMs: Long = 0L)
+    extends SustainedBreach[GeometrySaturationMonitor.Transition] {
 
   /** Record one audit observation (the WORST band's evicted share and
     * the total saturated-bucket count) and re-evaluate the rule. */
   def record(atMs: Long, evictedPpm: Long,
       nSaturatedBuckets: Long): Unit =
-    synchronized {
-      val breach = evictedPpm > evictedPpmMax
-      breachSinceMs =
-        if (breach) breachSinceMs.orElse(Some(atMs)) else None
-      val nowFiring = breachSinceMs.exists(s => atMs - s >= sustainMs)
-      if (nowFiring != isFiring)
-        history :+= Transition(atMs, nowFiring, evictedPpm,
-          nSaturatedBuckets)
-      isFiring = nowFiring
-    }
+    observe(atMs, evictedPpm > evictedPpmMax)(
+      GeometrySaturationMonitor.Transition(atMs, _, evictedPpm,
+        nSaturatedBuckets))
 
   /** Run the live-geometry audit for curated `prefix`, record its
     * worst band at `atMs`, and return the measured
@@ -70,4 +52,11 @@ class GeometrySaturationMonitor(
     record(atMs, worst, sat)
     (worst, sat)
   }
+}
+
+object GeometrySaturationMonitor {
+
+  /** One alert state change: raised (firing=true) or cleared. */
+  final case class Transition(atMs: Long, firing: Boolean,
+      evictedPpm: Long, nSaturatedBuckets: Long)
 }

@@ -26,31 +26,13 @@ import org.apache.spark.sql.SparkSession
 class IndexStalenessMonitor(
     oovMassPpm: Long = 50000L,
     avgdlShiftPpm: Long = 100000L,
-    sustainMs: Long = 0L) {
-
-  /** One alert state change: raised (firing=true) or cleared. */
-  final case class Transition(atMs: Long, firing: Boolean,
-      oovPpm: Long, avgdlPpm: Long)
-
-  private var breachSinceMs: Option[Long] = None
-  private var history = Vector.empty[Transition]
-  @volatile private var isFiring = false
-
-  def firing: Boolean = isFiring
-
-  def transitions: Seq[Transition] = synchronized(history)
+    protected val sustainMs: Long = 0L)
+    extends SustainedBreach[IndexStalenessMonitor.Transition] {
 
   /** Record one audit observation and re-evaluate the rule. */
   def record(atMs: Long, oovPpm: Long, avgdlPpm: Long): Unit =
-    synchronized {
-      val breach = oovPpm > oovMassPpm || avgdlPpm > avgdlShiftPpm
-      breachSinceMs =
-        if (breach) breachSinceMs.orElse(Some(atMs)) else None
-      val nowFiring = breachSinceMs.exists(s => atMs - s >= sustainMs)
-      if (nowFiring != isFiring)
-        history :+= Transition(atMs, nowFiring, oovPpm, avgdlPpm)
-      isFiring = nowFiring
-    }
+    observe(atMs, oovPpm > oovMassPpm || avgdlPpm > avgdlShiftPpm)(
+      IndexStalenessMonitor.Transition(atMs, _, oovPpm, avgdlPpm))
 
   /** Run the staleness audit for `prefix` against the live corpus at
     * `dir`, record it at `atMs`, and return the measured
@@ -64,4 +46,11 @@ class IndexStalenessMonitor(
     record(atMs, oov, avg)
     (oov, avg)
   }
+}
+
+object IndexStalenessMonitor {
+
+  /** One alert state change: raised (firing=true) or cleared. */
+  final case class Transition(atMs: Long, firing: Boolean,
+      oovPpm: Long, avgdlPpm: Long)
 }

@@ -25,22 +25,23 @@ class ContamSidecarSpec extends SparkSpec {
     .filter(col("vec_id") % 5 === 3)
     .select(col("vec_id"), col("embedding"))
 
-  private def withSidecar[T](on: Boolean)(body: => T): T =
-    try {
-      spark.conf.set("graft.contam.sidecar", on.toString)
-      body
-    } finally spark.conf.unset("graft.contam.sidecar")
+  /** The gate's verdicts, served from the sidecar (`on`) or through
+    * the corpus-scan form `checkDeltaWith` keeps for pre-sidecar
+    * prefixes. */
+  private def verdicts(on: Boolean): Seq[org.apache.spark.sql.Row] = {
+    val nd = deltaDocs.dropDuplicates("doc_id").localCheckpoint(true)
+    IngestGate.checkDeltaWith(spark, dir, "csc", nd, IngestGate.deltaFrames(nd),
+        deltaVecs, 0.4, contamScan = !on)
+      .orderBy("doc_id").collect().toSeq
+  }
 
   test("gate verdicts: sidecar-served == corpus-scan, fresh and replayed") {
     dropPrefix("csc")
     IngestGate.build(spark, dir, "csc", buckets = 4,
       whereDocs = !dPred, whereVecs = !(col("vec_id") % 5 === 3))
     try {
-      def verdicts(): Seq[org.apache.spark.sql.Row] =
-        IngestGate.checkDelta(spark, dir, "csc", deltaDocs, deltaVecs)
-          .orderBy("doc_id").collect().toSeq
-      val viaCm = withSidecar(on = true)(verdicts())
-      val viaScan = withSidecar(on = false)(verdicts())
+      val viaCm = verdicts(on = true)
+      val viaScan = verdicts(on = false)
       assert(viaCm.nonEmpty)
       assert(viaCm == viaScan)
       // and the verdict actually fires somewhere at this SF — an
@@ -52,8 +53,8 @@ class ContamSidecarSpec extends SparkSpec {
       // hides its own filed copies exactly like the corpus scan's)
       IngestGate.appendDelta(spark, "csc", deltaDocs, deltaVecs,
         buckets = 4)
-      assert(withSidecar(on = true)(verdicts()) == viaCm)
-      assert(withSidecar(on = false)(verdicts()) == viaCm)
+      assert(verdicts(on = true) == viaCm)
+      assert(verdicts(on = false) == viaCm)
     } finally dropPrefix("csc")
   }
 

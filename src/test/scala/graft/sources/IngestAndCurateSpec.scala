@@ -115,16 +115,16 @@ class IngestAndCurateSpec extends SparkSpec {
   }
 
   test("lazy composition (bulk-delta branch) == cached == sequential") {
-    // above graft.compose.cacheMaxDocs the shared frames stay lazy
+    // above graft.compose.cacheMaxBytes the shared frames stay lazy
     // (each consumer recomputes, fused into its own pipeline — the
-    // measured bulk-backfill crossover); forcing the dial to 0 runs
+    // measured bulk-backfill crossover); forcing the dial to -1 runs
     // the spec delta through that branch, which must be semantically
     // invisible exactly like the cached one
     Seq("lzg", "lzc", "lsg", "lsc").foreach(dropPrefix)
     val whereDocs = !(col("doc_id") % 5 === 3)
     val whereVecs = !(col("vec_id") % 5 === 3)
     try {
-      spark.conf.set("graft.compose.cacheMaxDocs", "0")
+      spark.conf.set("graft.compose.cacheMaxBytes", "-1")
       IngestGate.build(spark, dir, "lzg", buckets = 4, whereDocs, whereVecs)
       IngestGate.build(spark, dir, "lsg", buckets = 4, whereDocs, whereVecs)
       CuratedCorpusLayout.buildIncremental(spark, dir, "lzc", buckets = 4,
@@ -152,7 +152,7 @@ class IngestAndCurateSpec extends SparkSpec {
       assert(spark.table("lzg_mm_tiles").count() ==
         spark.table("lsg_mm_tiles").count())
     } finally {
-      spark.conf.unset("graft.compose.cacheMaxDocs")
+      spark.conf.unset("graft.compose.cacheMaxBytes")
       Seq("lzg", "lzc", "lsg", "lsc").foreach(dropPrefix)
     }
   }

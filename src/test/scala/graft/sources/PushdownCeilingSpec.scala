@@ -18,7 +18,7 @@ import graft.queries.DedupQueries
   * byte-equal verdicts vs the over-gate broadcast-semi-join branch
   * (forced on the SAME delta via the lowering-only
   * `graft.scanprune.maxPushdownIn` seam) and vs the corpus-scan twin
-  * (`graft.contam.sidecar=false`). */
+  * (`checkDeltaWith`'s `contamScan`). */
 class PushdownCeilingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -89,7 +89,10 @@ class PushdownCeilingSpec extends SparkSpec {
       assert(semiBranch == inBranch)
 
       // and the pre-sidecar corpus-scan twin agrees too
-      val corpusScan = withConf("graft.contam.sidecar", "false")(verdicts())
+      val nd = delta.dropDuplicates("doc_id").localCheckpoint(true)
+      val corpusScan = IngestGate.checkDeltaWith(spark, dir, "pcl", nd,
+          IngestGate.deltaFrames(nd), vecs, 0.4, contamScan = true)
+        .orderBy("doc_id").collect().toSeq
       assert(corpusScan == inBranch)
     } finally dropPrefix("pcl")
   }
