@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-
 import graft.sources.AnnIndexLayout
+import graft.util.Sessions
 
 /** ANN online-serving benchmark: build the persisted IVF-PQ index once,
   * then answer the registered query set as a STREAM of micro-batches
@@ -16,24 +13,12 @@ import graft.sources.AnnIndexLayout
 object AnnServeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_SERVE_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-serve-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
 
     val prefix = "ann_serve_bench"
-    val tb0 = System.nanoTime()
-    AnnIndexLayout.build(spark, sfDir, prefix)
-    val buildSec = (System.nanoTime() - tb0) / 1e9
+    val (_, buildSec) = Sessions.timed(AnnIndexLayout.build(spark, sfDir, prefix))
 
     // the registered subset, via the one shared predicate — the bench
     // must measure the same query set the specs pin byte-equal online
@@ -41,33 +26,19 @@ object AnnServeBench {
       .filter(graft.queries.SimilarityQueries.isQuery)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
-    // ceil division: floor would yield MORE micro-batches than asked
-    // (85 queries / 4 -> groups of 21 -> 5 batches), skewing the
-    // per-batch latency stats across runs of different query counts
-    val groups = qs.grouped(math.max(1, (qs.size + batches - 1) / batches))
-      .toSeq
 
     var served = 0L
-    val mem = MemoryStream[(Long, Array[Float])]
-    val stream = mem.toDF().toDF("vec_id", "embedding")
     // corpus-member queries: self-exclusion on, like the online query
-    val q = AnnIndexLayout.serveStream(spark, sfDir, prefix, stream,
-      excludeSelf = true) {
-      (res, _) => served += res.count()
+    val r = Sessions.replay(spark, Sessions.groups(qs, batches)) { ds =>
+      AnnIndexLayout.serveStream(spark, sfDir, prefix,
+        ds.toDF("vec_id", "embedding"), excludeSelf = true) {
+        (res, _) => served += res.count()
+      }
     }
-    val t0 = System.nanoTime()
-    val batchSecs = groups.map { g =>
-      val b0 = System.nanoTime()
-      mem.addData(g: _*)
-      q.processAllAvailable()
-      (System.nanoTime() - b0) / 1e9
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
     require(served > 0, "no results served")
 
-    val qps = qs.size / wall
-    println(f"""{"metric":"ann_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_avg":${batchSecs.sum / batchSecs.size}%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"sf":${util.Json.quote(sfDir)}}""")
+    val qps = qs.size / r.wall
+    println(f"""{"metric":"ann_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${r.batchSecs.size},"wall_sec":${r.wall}%.2f,"batch_sec_avg":${r.avg}%.2f,"batch_sec_max":${r.max}%.2f,"index_build_sec":$buildSec%.2f,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

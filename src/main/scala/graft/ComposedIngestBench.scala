@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{CuratedCorpusLayout, IngestGate}
+import graft.util.Sessions
 
 /** Composed-vs-sequential snapshot ingest: the win
   * [[graft.sources.IngestGate.ingestAndCurate]] exists for, measured.
@@ -20,31 +20,8 @@ import graft.sources.{CuratedCorpusLayout, IngestGate}
 object ComposedIngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-cib-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // decade-scale legs legitimately stall the one local executor in
-      // multi-minute GC; keep the heartbeat from killing the run
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      // single-host fitting, not engine tuning (the CosGeomBench
-      // note): at the 100× decade the ~60 MB vector frame must
-      // broadcast so the cosine verify joins run broadcast-hash — as
-      // sort-merge each candidate row drags its embedding through a
-      // shuffle whose spill filled this host's disk; a cluster's
-      // aggregate shuffle capacity absorbs that by design
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Sessions.dev(Sessions.singleHostBroadcast: _*)
+    import Sessions.timed
     val buckets = 8
     // the daily-crawl shape (CuratedDeltaBench's bound): a bounded
     // delta against a corpus that is everything else

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.DedupQueries
 import graft.sources.CuratedCorpusLayout
+import graft.util.Sessions
 
 /** The sign-LSH geometry dial, actually turned: at ~100× SF the W=6
   * audit default's per-bucket postings (~corpus/2^W) make the cosine
@@ -33,38 +33,13 @@ import graft.sources.CuratedCorpusLayout
 object CosGeomBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val tryW6 = sys.env.getOrElse("SPARK_GRAFT_COS_W6", "1") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-cosgeom-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // a 10^8-candidate verify leg legitimately stalls the one local
-      // executor in multi-minute GC; do not let the default 120 s
-      // heartbeat declare it dead mid-measurement
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      // single-host fitting, not engine tuning: the 100× vector frame
-      // (~200k × 260 B ≈ 60 MB) broadcasts, turning the verify joins
-      // into broadcast-hash — without it each candidate row drags its
-      // embedding through a sort-merge shuffle (~80 GB spill at W=8,
-      // ~220 GB at W=6; the W=6 leg filled this host's disk). On a
-      // cluster the aggregate shuffle capacity absorbs that by design;
-      // here the measurement would die of disk, not of the work.
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      // sequential legs in one JVM stack their shuffle files until the
-      // stale RDD references are GC'd; reclaim between legs
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // sequential legs in one JVM stack their shuffle files until the
+    // stale RDD references are GC'd; reclaim between legs
+    val spark = Sessions.dev(Sessions.singleHostBroadcast :+
+      ("spark.cleaner.periodicGC.interval" -> "60s"): _*)
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    import Sessions.timed
 
     val e = DedupQueries.normedDirVecs(
         graft.util.Tables.load(spark, sfDir, "embeddings")

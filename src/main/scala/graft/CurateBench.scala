@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.CuratedCorpusLayout
+import graft.util.Sessions
 
 /** Curated-corpus artifact benchmark: pay the full `pipeline_curate`
   * chain ONCE ([[CuratedCorpusLayout.build]]), then time serving +
@@ -11,24 +10,11 @@ import graft.sources.CuratedCorpusLayout
 object CurateBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-curate-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Sessions.dev()
+    import Sessions.timed
     val prefix = "curate_bench"
     val (_, buildSec) = timed(
-      CuratedCorpusLayout.build(spark, sfDir, prefix, buckets = cpus.toInt))
+      CuratedCorpusLayout.build(spark, sfDir, prefix, buckets = Sessions.cpus))
     val (nServe, serveSec) = timed(
       CuratedCorpusLayout.serve(spark, prefix).count())
     val (gate, gateSec) = timed(

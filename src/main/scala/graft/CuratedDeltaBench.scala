@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.DedupQueries
 import graft.sources.CuratedCorpusLayout
+import graft.util.Sessions
 
 /** Incremental-curation benchmark: the refresh-vs-rebuild gap the
   * incremental layout exists for. Builds the stateful layout over the
@@ -15,26 +15,8 @@ import graft.sources.CuratedCorpusLayout
 object CuratedDeltaBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-curdelta-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // decade-scale builds legitimately stall the one local executor
-      // in multi-minute GC; the default 120 s heartbeat would declare
-      // it dead mid-measurement (the round-15 100× W=6 post-mortem)
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Sessions.dev()
+    import Sessions.timed
     val buckets = 8
     // SPARK_GRAFT_DELTA_BOUND caps the snapshot to DeltaPred docs with
     // doc_id below it — the daily-crawl shape: a BOUNDED delta against

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.DedupIndexLayout
+import graft.util.Sessions
 
 /** Incremental-dedup ingest benchmark: build the persisted MinHash
   * band index once over the corpus split, then stream the delta split
@@ -17,34 +16,16 @@ import graft.sources.DedupIndexLayout
 object DedupIngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_INGEST_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-dedup-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // decade-scale index builds legitimately stall the one local
-      // executor in multi-minute GC; keep the heartbeat from killing
-      // the run
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
 
     val prefix = "dedup_ingest_bench"
     // the registered dedup_delta_pairs split: 80% corpus, 20% "today's
     // crawl" — same predicate, so the bench measures the spec'd path
     val deltaPred = col("doc_id") % 5 === 3
-    val tb0 = System.nanoTime()
-    DedupIndexLayout.build(spark, sfDir, prefix, buckets = cpus.toInt,
-      where = !deltaPred)
-    val buildSec = (System.nanoTime() - tb0) / 1e9
+    val (_, buildSec) = Sessions.timed(DedupIndexLayout.build(spark, sfDir,
+      prefix, buckets = Sessions.cpus, where = !deltaPred))
 
     // SPARK_GRAFT_DELTA_BOUND caps the STREAMED delta (build corpus
     // unchanged): the corpus-slope measurement wants the SAME batch
@@ -57,30 +38,18 @@ object DedupIngestBench {
       .filter(deltaPred && col("doc_id") < bound)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1)
-    val groups = delta.grouped(
-      math.max(1, (delta.length + batches - 1) / batches)).toSeq
 
     var pairs = 0L
-    val mem = MemoryStream[(Long, String)]
-    val q = DedupIndexLayout.ingestStream(spark, prefix,
-      mem.toDF().toDF("doc_id", "text"), buckets = cpus.toInt) {
-      (res, _) => pairs += res.count()
+    val r = Sessions.replay(spark, Sessions.groups(delta, batches)) { ds =>
+      DedupIndexLayout.ingestStream(spark, prefix, ds.toDF("doc_id", "text"),
+        buckets = Sessions.cpus) {
+        (res, _) => pairs += res.count()
+      }
     }
-    val st0 = util.Steal.ticks()
-    val t0 = System.nanoTime()
-    val batchSecs = groups.map { g =>
-      val b0 = System.nanoTime()
-      mem.addData(g: _*)
-      q.processAllAvailable()
-      (System.nanoTime() - b0) / 1e9
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    val stealStream = util.Steal.ticks() - st0
-    q.stop()
     require(pairs > 0, "no near-dup pairs found in the delta")
 
-    val dps = delta.length / wall
-    println(f"""{"metric":"dedup_ingest_docs_per_sec","value":$dps%.1f,"unit":"docs/sec","docs":${delta.length},"pairs_found":$pairs,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_avg":${batchSecs.sum / batchSecs.size}%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"steal_stream":$stealStream,"sf":${util.Json.quote(sfDir)}}""")
+    val dps = delta.length / r.wall
+    println(f"""{"metric":"dedup_ingest_docs_per_sec","value":$dps%.1f,"unit":"docs/sec","docs":${delta.length},"pairs_found":$pairs,"batches":${r.batchSecs.size},"wall_sec":${r.wall}%.2f,"batch_sec_avg":${r.avg}%.2f,"batch_sec_max":${r.max}%.2f,"index_build_sec":$buildSec%.2f,"steal_stream":${r.steal},"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.DedupQueries
 import graft.sources.{AnnIndexLayout, BucketedTables, DedupIndexLayout,
   IngestGate, MediaIndexLayout}
+import graft.util.Sessions
 
 /** Dev-only per-LEG attribution of the gate's per-batch cost — the
   * tool for reading a GateIngestBench slope: times each check leg
@@ -16,32 +17,18 @@ import graft.sources.{AnnIndexLayout, BucketedTables, DedupIndexLayout,
 object GateProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ITERS", "2").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-gp-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.executor.heartbeatInterval", "120s")
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev(Sessions.singleHostBroadcast: _*)
+    val cpus = Sessions.cpus
 
     val prefix = "gate_profile"
     val dPred = DedupQueries.DeltaPred
     val vPred = DedupQueries.DeltaVecPred
-    def timed(f: => Any): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def best(f: => Any): Double = (1 to iters).map(_ => timed(f)).min
+    import Sessions.timed
+    def best(f: => Any): Double = (1 to iters).map(_ => timed(f)._2).min
 
-    val buildSec = timed(IngestGate.build(spark, sfDir, prefix,
-      buckets = cpus.toInt, whereDocs = !dPred, whereVecs = !vPred))
+    val (_, buildSec) = timed(IngestGate.build(spark, sfDir, prefix,
+      buckets = cpus, whereDocs = !dPred, whereVecs = !vPred))
 
     val docs = graft.util.Tables.load(spark, sfDir, "documents")
       .filter(dPred && col("doc_id") < 1250L)
@@ -73,25 +60,25 @@ object GateProfile {
       BucketedTables.read(spark, s"${prefix}_split")
         .join(broadcast(ids), Seq("doc_id"), "left_anti"),
       trainIds).count())
-    val appDd = timed(DedupIndexLayout.appendDeltaDocs(spark,
-      s"${prefix}_dd", docs, cpus.toInt))
-    val appMm = timed(MediaIndexLayout.appendDeltaDocs(spark,
-      s"${prefix}_mm", docs, cpus.toInt))
-    val appAnn = timed(AnnIndexLayout.appendDeltaVectors(spark,
-      s"${prefix}_ann", vecs, cpus.toInt))
+    val (_, appDd) = timed(DedupIndexLayout.appendDeltaDocs(spark,
+      s"${prefix}_dd", docs, cpus))
+    val (_, appMm) = timed(MediaIndexLayout.appendDeltaDocs(spark,
+      s"${prefix}_mm", docs, cpus))
+    val (_, appAnn) = timed(AnnIndexLayout.appendDeltaVectors(spark,
+      s"${prefix}_ann", vecs, cpus))
     // the split-table leg of IngestGate.appendDelta, inlined
-    val appSplit = timed {
+    val (_, appSplit) = timed {
       BucketedTables.appendBucketed(
         docs.select(col("doc_id"), DedupQueries.isTrainOf.as("is_train"))
           .join(BucketedTables.read(spark, s"${prefix}_split")
               .select(col("doc_id"))
               .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct(),
             Seq("doc_id"), "left_anti"),
-        s"${prefix}_split", "doc_id", cpus.toInt)
+        s"${prefix}_split", "doc_id", cpus)
       spark.catalog.refreshTable(s"${prefix}_split")
     }
-    val appendReplay = timed(IngestGate.appendDelta(spark, prefix, docs,
-      vecs, cpus.toInt))
+    val (_, appendReplay) = timed(IngestGate.appendDelta(spark, prefix, docs,
+      vecs, cpus))
 
     println(f"""{"metric":"gate_profile","unit":"sec","docs":$nDocs,"build_sec":$buildSec%.2f,"text_check":$text%.2f,"media_check":$media%.2f,"sem_check":$sem%.2f,"contam_sidecar":$contamCm%.2f,"contam_scan":$contamScan%.2f,"append_dd":$appDd%.2f,"append_mm":$appMm%.2f,"append_ann":$appAnn%.2f,"append_split":$appSplit%.2f,"append_replay":$appendReplay%.2f,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()

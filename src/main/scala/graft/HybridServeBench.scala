@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.{HybridIndexLayout, TextIndexLayout}
+import graft.util.Sessions
 
 /** Hybrid (RRF) online-serving benchmark: build BOTH persisted leg
   * indexes once, then answer the registered query set as a STREAM of
@@ -19,28 +18,16 @@ import graft.sources.{HybridIndexLayout, TextIndexLayout}
 object HybridServeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_SERVE_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-hserve-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
 
     val textPrefix = "hyb_serve_txt"
     val densePrefix = "hyb_serve_ann"
-    val tb0 = System.nanoTime()
-    TextIndexLayout.build(spark, sfDir, textPrefix)
-    val textBuildSec = (System.nanoTime() - tb0) / 1e9
-    val db0 = System.nanoTime()
-    HybridIndexLayout.buildDense(spark, sfDir, densePrefix)
-    val denseBuildSec = (System.nanoTime() - db0) / 1e9
+    val (_, textBuildSec) = Sessions.timed(
+      TextIndexLayout.build(spark, sfDir, textPrefix))
+    val (_, denseBuildSec) = Sessions.timed(
+      HybridIndexLayout.buildDense(spark, sfDir, densePrefix))
 
     // the registered query subset (every 50th doc) with both
     // modalities — the set HybridIndexLayoutSpec pins byte-equal online
@@ -50,35 +37,24 @@ object HybridServeBench {
       .join(graft.util.Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id").as("q_id"), col("embedding")), Seq("q_id"))
       .as[(Long, String, Array[Float])].collect().toSeq
-    val groups = qs.grouped(math.max(1, (qs.size + batches - 1) / batches))
-      .toSeq
 
     var served = 0L
-    val mem = MemoryStream[(Long, String, Array[Float])]
-    val stream = mem.toDF().toDF("q_id", "text", "embedding")
-    val q = HybridIndexLayout.serveHybridStream(spark, sfDir,
-      textPrefix, densePrefix, stream, excludeSelf = true) {
-      (res, _) => served += res.count()
+    val r = Sessions.replay(spark, Sessions.groups(qs, batches)) { ds =>
+      HybridIndexLayout.serveHybridStream(spark, sfDir, textPrefix,
+        densePrefix, ds.toDF("q_id", "text", "embedding"),
+        excludeSelf = true) {
+        (res, _) => served += res.count()
+      }
     }
-    val t0 = System.nanoTime()
-    val batchSecs = groups.map { g =>
-      val b0 = System.nanoTime()
-      mem.addData(g: _*)
-      q.processAllAvailable()
-      (System.nanoTime() - b0) / 1e9
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
     require(served > 0, "no results served")
-    val qps = qs.size / wall
+    val qps = qs.size / r.wall
 
     // the per-invocation price serving amortizes: the online query
     // (both leg builds + fusion) over the same registered set
-    val on0 = System.nanoTime()
-    val onlineRows = graft.queries.TextQueries.hybridRrf(spark, sfDir).count()
-    val onlineWall = (System.nanoTime() - on0) / 1e9
+    val (onlineRows, onlineWall) = Sessions.timed(
+      graft.queries.TextQueries.hybridRrf(spark, sfDir).count())
 
-    println(f"""{"metric":"hybrid_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_avg":${batchSecs.sum / batchSecs.size}%.2f,"batch_sec_max":${batchSecs.max}%.2f,"text_build_sec":$textBuildSec%.2f,"dense_build_sec":$denseBuildSec%.2f,"online_wall_sec":$onlineWall%.2f,"online_rows":$onlineRows,"sf":${util.Json.quote(sfDir)}}""")
+    println(f"""{"metric":"hybrid_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${r.batchSecs.size},"wall_sec":${r.wall}%.2f,"batch_sec_avg":${r.avg}%.2f,"batch_sec_max":${r.max}%.2f,"text_build_sec":$textBuildSec%.2f,"dense_build_sec":$denseBuildSec%.2f,"online_wall_sec":$onlineWall%.2f,"online_rows":$onlineRows,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.MediaIndexLayout
+import graft.util.Sessions
 
 /** Perceptual media ingest benchmark: build the persisted tile index
   * once over the corpus split, stream the delta split through
@@ -14,27 +13,14 @@ import graft.sources.MediaIndexLayout
 object MediaIngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_INGEST_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-media-wh").toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
 
     val prefix = "media_ingest_bench"
     val deltaPred = col("doc_id") % 5 === 3
-    val tb0 = System.nanoTime()
-    MediaIndexLayout.build(spark, sfDir, prefix, buckets = cpus.toInt,
-      where = !deltaPred)
-    val buildSec = (System.nanoTime() - tb0) / 1e9
+    val (_, buildSec) = Sessions.timed(MediaIndexLayout.build(spark, sfDir,
+      prefix, buckets = Sessions.cpus, where = !deltaPred))
 
     // SPARK_GRAFT_DELTA_BOUND caps the STREAMED delta (build corpus
     // unchanged) — the DedupIngestBench corpus-slope discipline: the
@@ -45,28 +31,18 @@ object MediaIngestBench {
       .filter(deltaPred && col("doc_id") < bound)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1)
-    val groups = delta.grouped(
-      math.max(1, (delta.length + batches - 1) / batches)).toSeq
 
     var pairs = 0L
-    val mem = MemoryStream[(Long, String)]
-    val q = MediaIndexLayout.ingestStream(spark, prefix,
-      mem.toDF().toDF("doc_id", "text"), buckets = cpus.toInt) {
-      (res, _) => pairs += res.count()
+    val r = Sessions.replay(spark, Sessions.groups(delta, batches)) { ds =>
+      MediaIndexLayout.ingestStream(spark, prefix, ds.toDF("doc_id", "text"),
+        buckets = Sessions.cpus) {
+        (res, _) => pairs += res.count()
+      }
     }
-    val t0 = System.nanoTime()
-    val batchSecs = groups.map { g =>
-      val b0 = System.nanoTime()
-      mem.addData(g: _*)
-      q.processAllAvailable()
-      (System.nanoTime() - b0) / 1e9
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
     require(pairs > 0, "no perceptual near-dup pairs found in the delta")
 
-    val dps = delta.length / wall
-    println(f"""{"metric":"media_ingest_docs_per_sec","value":$dps%.1f,"unit":"docs/sec","docs":${delta.length},"pairs_found":$pairs,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_avg":${batchSecs.sum / batchSecs.size}%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"sf":${util.Json.quote(sfDir)}}""")
+    val dps = delta.length / r.wall
+    println(f"""{"metric":"media_ingest_docs_per_sec","value":$dps%.1f,"unit":"docs/sec","docs":${delta.length},"pairs_found":$pairs,"batches":${r.batchSecs.size},"wall_sec":${r.wall}%.2f,"batch_sec_avg":${r.avg}%.2f,"batch_sec_max":${r.max}%.2f,"index_build_sec":$buildSec%.2f,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

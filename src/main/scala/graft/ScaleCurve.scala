@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Dev-only: time a query subset on two data directories (e.g. sf0.1
   * vs the ScaleData-inflated sf1.0) and print one JSON line with the
@@ -30,39 +30,23 @@ object ScaleCurve {
         "dedup_prefix_jaccard", "txt_bm25_topk",
         "dedup_contamination_bloom", "txt_dup_spans", "txt_span_coverage",
         "txt_strip_spans")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
 
     def time(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
       (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
         // toRdd, not count(): a count aggregate lets Catalyst eliminate
         // the query's final global ORDER BY — one of the likeliest
         // superlinear stages this tool exists to catch
-        fn(spark, dir).queryExecution.toRdd.count()
-        spark.sharedState.cacheManager.clearCache()
-        // localCheckpoint() blocks live at the RDD layer, which
-        // clearCache() does not touch — drop them so min-of-N reps
-        // don't accumulate cached copies that skew later timings
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        (System.nanoTime() - t0) / 1e9
+        Sessions.timed {
+          fn(spark, dir).queryExecution.toRdd.count()
+          Sessions.dropCaches(spark)
+        }._2
       }.min
     }
 
     // warm file listings + committers once per dir
-    graft.util.Tables.names.foreach { n =>
-      graft.util.Tables.load(spark, dirA, n).count()
-      graft.util.Tables.load(spark, dirB, n).count()
-    }
+    Sessions.warm(spark, dirA, dirB)
     val rows = queries.map { q =>
       val a = time(q, dirA)
       val b = time(q, dirB)

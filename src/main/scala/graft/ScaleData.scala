@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Dev-only: inflate a driver testdata directory N-fold for scale-curve
   * measurement (the sandbox has no sf1.0; this builds a faithful one
@@ -36,14 +38,7 @@ object ScaleData {
     val src = args(0)
     val dst = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
 
     def base(name: String): DataFrame = graft.util.Tables.load(spark, src, name)
 

@@ -1,13 +1,10 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.Attribution
 import graft.operators.Attribution.AttribEvent
+import graft.util.Sessions
 
 /** Dev-only: throughput of the typed custom-state streaming operators
   * (flatMapGroupsWithState) — replays the driver events table through
@@ -21,16 +18,9 @@ object StateOpsBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val batch = if (args.length > 1) args(1).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // state-store instance count == shuffle partitions; small batches
-      // want few stores (see README streaming sizing note)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // state-store instance count == shuffle partitions == cores; small
+    // batches want few stores (see README streaming sizing note)
+    val spark = Sessions.dev()
     import spark.implicits._
 
     val rows = graft.util.Tables.load(spark, sfDir, "events")
@@ -41,22 +31,14 @@ object StateOpsBench {
       .sortBy(e => (e.eventTime.getTime, e.eventId))
     println(s"[stateops] replaying ${rows.length} events, batch=$batch")
 
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[AttribEvent]
-    val credits = Attribution.streamingCredits(
-      mem.toDS().withWatermark("eventTime", "24 hours"))
-    val q = credits.writeStream.format("memory")
-      .queryName("stateops_credits").outputMode(OutputMode.Append()).start()
-    val t0 = System.nanoTime()
-    rows.grouped(batch).foreach { chunk =>
-      mem.addData(chunk.toIndexedSeq: _*)
-      q.processAllAvailable()
+    val r = Sessions.replay(spark, rows.toSeq.grouped(batch).toSeq) { ds =>
+      Attribution.streamingCredits(ds.withWatermark("eventTime", "24 hours"))
+        .writeStream.format("memory").queryName("stateops_credits")
+        .outputMode(OutputMode.Append()).start()
     }
-    val sec = (System.nanoTime() - t0) / 1e9
     val out = spark.table("stateops_credits").count()
-    q.stop()
-    println(f"[stateops] attribution: ${rows.length} events in $sec%.1f s " +
-      f"= ${rows.length / sec}%.0f events/s ($out credits)")
+    println(f"[stateops] attribution: ${rows.length} events in ${r.wall}%.1f s " +
+      f"= ${rows.length / r.wall}%.0f events/s ($out credits)")
     spark.stop()
   }
 }

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.EventsPipeline
+import graft.util.Sessions
 
 /** Streaming-throughput benchmark: replays the driver `events` table as
   * reference-shaped JSONL envelopes through the full streaming pipeline
@@ -22,14 +22,7 @@ import graft.streaming.EventsPipeline
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     // GRAFT_STATE_STORE=rocksdb benches the large-state provider
     // (graft.streaming.StateStores) on the same pipeline
     val store = sys.env.getOrElse("GRAFT_STATE_STORE", "default")
@@ -64,11 +57,12 @@ object StreamBench {
     def run(maxFiles: Option[Int]): (Double, Seq[Long]) = {
       val ckpt = Files.createTempDirectory("graft-sb-ckpt")
       val out = Files.createTempDirectory("graft-sb-out")
-      val t0 = System.nanoTime()
-      val q = EventsPipeline.start(spark, in.toString, ckpt.toString,
-        out.toString, Trigger.AvailableNow(), maxFiles)
-      q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (q, sec) = Sessions.timed {
+        val q = EventsPipeline.start(spark, in.toString, ckpt.toString,
+          out.toString, Trigger.AvailableNow(), maxFiles)
+        q.awaitTermination()
+        q
+      }
       val hours = EventsPipeline.readHourlyMetrics(spark, out.toString).count()
       require(hours > 0, "sink is empty")
       // per-micro-batch latency from the engine's own progress events:

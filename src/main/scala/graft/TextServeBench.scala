@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.TextIndexLayout
+import graft.util.Sessions
 
 /** BM25 online-serving benchmark: build the persisted text index once,
   * then answer the registered query set as a STREAM of micro-batches
@@ -16,24 +15,12 @@ import graft.sources.TextIndexLayout
 object TextServeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batches = sys.env.getOrElse("SPARK_GRAFT_SERVE_BATCHES", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-tserve-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.dev()
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
 
     val prefix = "txt_serve_bench"
-    val tb0 = System.nanoTime()
-    TextIndexLayout.build(spark, sfDir, prefix)
-    val buildSec = (System.nanoTime() - tb0) / 1e9
+    val (_, buildSec) = Sessions.timed(TextIndexLayout.build(spark, sfDir, prefix))
 
     // the registered query subset (every 50th doc), as raw text —
     // the same set TextIndexLayoutSpec pins byte-equal online
@@ -41,41 +28,28 @@ object TextServeBench {
       .filter(col("doc_id") % 50 === 0)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
-    val groups = qs.grouped(math.max(1, (qs.size + batches - 1) / batches))
-      .toSeq
 
     var served = 0L
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("q_id", "text")
     // corpus-member queries: self-exclusion on, like the online query
-    val q = TextIndexLayout.serveStream(spark, prefix, stream,
-      excludeSelf = true) {
-      (res, _) => served += res.count()
+    val r = Sessions.replay(spark, Sessions.groups(qs, batches)) { ds =>
+      TextIndexLayout.serveStream(spark, prefix, ds.toDF("q_id", "text"),
+        excludeSelf = true) {
+        (res, _) => served += res.count()
+      }
     }
-    val t0 = System.nanoTime()
-    val batchSecs = groups.map { g =>
-      val b0 = System.nanoTime()
-      mem.addData(g: _*)
-      q.processAllAvailable()
-      (System.nanoTime() - b0) / 1e9
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    q.stop()
     require(served > 0, "no results served")
 
-    val qps = qs.size / wall
+    val qps = qs.size / r.wall
 
     // PRF serving: the two-pass RM3 path over the same index + query
     // set — the per-query price of the second probe pass relative to
     // single-pass serving (batch mode; the stream bridge is identical)
     val qdf = qs.toDF("q_id", "text")
-    val tp0 = System.nanoTime()
-    val prfRows = TextIndexLayout.servePrf(spark, prefix, qdf,
-      excludeSelf = true).count()
-    val prfWall = (System.nanoTime() - tp0) / 1e9
+    val (prfRows, prfWall) = Sessions.timed(TextIndexLayout.servePrf(spark,
+      prefix, qdf, excludeSelf = true).count())
     val prfQps = qs.size / prfWall
 
-    println(f"""{"metric":"txt_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${batchSecs.size},"wall_sec":$wall%.2f,"batch_sec_avg":${batchSecs.sum / batchSecs.size}%.2f,"batch_sec_max":${batchSecs.max}%.2f,"index_build_sec":$buildSec%.2f,"prf_queries_per_sec":$prfQps%.1f,"prf_result_rows":$prfRows,"sf":${util.Json.quote(sfDir)}}""")
+    println(f"""{"metric":"txt_serve_queries_per_sec","value":$qps%.1f,"unit":"queries/sec","queries":${qs.size},"result_rows":$served,"batches":${r.batchSecs.size},"wall_sec":${r.wall}%.2f,"batch_sec_avg":${r.avg}%.2f,"batch_sec_max":${r.max}%.2f,"index_build_sec":$buildSec%.2f,"prf_queries_per_sec":$prfQps%.1f,"prf_result_rows":$prfRows,"sf":${util.Json.quote(sfDir)}}""")
     spark.stop()
   }
 }

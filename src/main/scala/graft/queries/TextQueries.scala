@@ -1058,9 +1058,11 @@ object TextQueries {
     // load-balances the single-row-group scan; toks is projected once
     // above it (multi-referenced non-cheap alias — CollapseProject
     // leaves it materialized) and every metric is row-local from there:
-    // no persist fence, no token-grain shuffle, no join.
+    // no persist fence, no token-grain shuffle, no join. A null text has
+    // no tokens, so it has no row, as in the exploded form and the oracle.
     val base = docs(spark, dir)
       .select(col("doc_id"), col("text"))
+      .filter(col("text").isNotNull)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
         length(col("text")).cast(LongType).as("n_chars_m"),

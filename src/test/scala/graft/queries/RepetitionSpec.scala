@@ -10,14 +10,15 @@ import graft.SparkSpec
   * relational (explode + gram-grain aggregate) form it replaced, on a
   * fixture planted with the shapes that distinguish them: repeated
   * words, repeated bigrams, single-token docs (no bigram grain), docs
-  * below the trigram floor, and coverage ties. */
+  * below the trigram floor, coverage ties, and null text. */
 class RepetitionSpec extends SparkSpec {
   import spark.implicits._
 
   private def corpus(docs: Seq[String]): java.nio.file.Path = {
     val d = tmpDir("graft-rep")
     val rows = docs.zipWithIndex.map { case (text, i) =>
-      (i.toLong, text, "en", s"src${i % 3}", text.length.toLong)
+      (i.toLong, text, "en", s"src${i % 3}",
+        Option(text).fold(0L)(_.length.toLong))
     }
     writeFixture(d, "documents",
       rows.toDF("doc_id", "text", "lang", "source", "n_chars"))
@@ -66,7 +67,9 @@ class RepetitionSpec extends SparkSpec {
     // coverage tie: two words, same count, same length
     "aa bb aa bb",
     // longer mixed doc
-    (0 until 50).map(i => s"w${i % 7}").mkString(" "))
+    (0 until 50).map(i => s"w${i % 7}").mkString(" "),
+    // null text: no tokens, so the relational form (explode) has no row
+    null)
 
   test("per-row run-length metrics equal the relational gram aggregate") {
     val dir = corpus(fixture)
