@@ -31,11 +31,17 @@ import org.apache.spark.sql.types._
   *  - exactly-once via checkpoint + idempotent batch-id sink vs the
   *    reference's at-least-once manual offset commits.
   *
-  * Parsing uses `get_json_object` rather than a fixed `from_json`
-  * struct because payload numerics legitimately arrive as strings
-  * ("20.5", tests/test_consumer.py:17) or numbers — JSON-path
-  * extraction canonicalizes both to text, then typed casts apply the
-  * reference's coercion rules (consumer/consumer.py:64-74).
+  * Parsing reads each line once per nesting level, as the reference's
+  * single `json.loads` does (consumer/consumer.py:102): one
+  * `json_tuple` takes the envelope fields from the line, a second takes
+  * the payload fields from the `payload` text. `json_tuple` keeps every
+  * scalar as text, because payload numerics legitimately arrive as
+  * strings ("20.5", tests/test_consumer.py:17) or numbers; typed casts
+  * then apply the reference's coercion rules (consumer/consumer.py:
+  * 64-74). A line missing an envelope field is re-read whole only then,
+  * to tell malformed JSON from missing keys, so valid lines never pay
+  * for that check. On a duplicate key the last occurrence wins, as in
+  * `json.loads`.
   */
 object EventsPipeline {
 
@@ -50,15 +56,15 @@ object EventsPipeline {
     "energy_consumed" -> Seq("customer_id", "session_id", "channel", "energy_consumed"),
     "bill_payment" -> Seq("customer_id", "session_id", "channel", "payment_amount"))
 
-  private def payloadField(name: String): Column =
-    get_json_object(col("value"), s"$$.payload.$name")
-
   /** Numeric coercion per the reference: parseable and >= 0 -> value,
     * otherwise null (consumer/consumer.py:64-74; the raw-insert path
-    * nulls invalid numerics, consumer/consumer.py:198-206). */
+    * nulls invalid numerics, consumer/consumer.py:198-206). A value too
+    * large for the column's decimal type is invalid too: `try_cast`
+    * nulls it where a plain cast would fail the whole batch under ANSI
+    * mode. */
   private def validNumeric(c: Column, dt: DataType): Column = {
     val d = c.try_cast(DoubleType) // ANSI-safe: malformed -> null
-    when(d.isNotNull && d >= 0.0, d.cast(dt))
+    when(d.isNotNull && d >= 0.0, d.try_cast(dt))
   }
 
   /** Parse raw JSON lines (column `value`) and classify each row.
@@ -66,17 +72,27 @@ object EventsPipeline {
     * dead-letter reason, mirroring producer/producer.py:55-67 and
     * consumer/consumer.py:112-123). */
   def parseAndValidate(lines: DataFrame): DataFrame = {
-    val parsed = lines.select(
-      col("value"),
-      get_json_object(col("value"), "$.event_type").as("event_type"),
-      get_json_object(col("value"), "$.event_time").as("event_time_raw"),
-      get_json_object(col("value"), "$.payload").as("payload_raw"),
-      payloadField("customer_id").as("customer_id"),
-      payloadField("session_id").try_cast(IntegerType).as("session_id"),
-      payloadField("channel").as("channel"),
-      payloadField("tariff_type").as("tariff_type"),
-      payloadField("energy_consumed").as("energy_raw"),
-      payloadField("payment_amount").as("payment_raw"))
+    // A string payload holding an object's JSON text is not that object.
+    // Such a text's quotes reach the line escaped or inside single quotes,
+    // so only a line with a backslash or an apostrophe is parsed once
+    // more, with json_tuple's leniency, to ask whether `payload` is an
+    // object (any other JSON type fails the struct and leaves it null).
+    val payloadIsObject =
+      !(col("value").contains("\\") || col("value").contains("'")) ||
+        from_json(col("value"), "payload STRUCT<customer_id: STRING>",
+          Map("allowUnquotedControlChars" -> "true"))
+          .getField("payload").isNotNull
+    val parsed = lines
+      .select(col("value"),
+        json_tuple(col("value"), "event_type", "event_time", "payload")
+          .as(Seq("event_type", "event_time_raw", "payload_raw")))
+      .select(col("*"),
+        json_tuple(when(payloadIsObject, col("payload_raw")),
+          "customer_id", "session_id", "channel",
+          "tariff_type", "energy_consumed", "payment_amount")
+          .as(Seq("customer_id", "session_id", "channel", "tariff_type",
+            "energy_raw", "payment_raw")))
+      .withColumn("session_id", col("session_id").try_cast(IntegerType))
       .withColumn("event_time",
         // accepts both "2025-06-01T02:04:33.033906" and "...T12:00:00Z"
         expr("try_cast(event_time_raw AS timestamp)"))
@@ -92,9 +108,10 @@ object EventsPipeline {
       }
 
     parsed.withColumn("reason",
-      when(get_json_object(col("value"), "$").isNull, "malformed_json")
-        .when(col("event_type").isNull || col("event_time_raw").isNull ||
-          col("payload_raw").isNull, "missing_required_keys")
+      when(col("event_type").isNull || col("event_time_raw").isNull ||
+          col("payload_raw").isNull,
+          when(get_json_object(col("value"), "$").isNull, "malformed_json")
+            .otherwise("missing_required_keys"))
         .when(length(trim(col("event_type"))) === 0, "empty_event_type")
         .when(!col("event_type").isin(RequiredPayloadFields.keys.toSeq: _*),
           "unknown_event_type")

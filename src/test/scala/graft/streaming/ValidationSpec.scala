@@ -1,6 +1,10 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.SparkSpec
 
 /** Mirrors the reference's 12 unit tests (tests/test_producer.py,
@@ -78,6 +82,54 @@ class ValidationSpec extends SparkSpec {
       EventsPipeline.parseAndValidate(Seq(neg, bad).toDF("value"))).collect()
     assert(raw.length == 2)
     assert(raw.forall(_.getAs[java.math.BigDecimal]("payment_amount") == null))
+  }
+
+  // amounts too large for DECIMAL(10,2) / DECIMAL(10,3): a plain cast
+  // throws NUMERIC_VALUE_OUT_OF_RANGE under ANSI mode
+  private val overflow = Seq(
+    """{"event_type": "bill_payment", "event_time": "2025-06-04T12:00:00Z", "payload": {"customer_id": "c1", "session_id": 1, "channel": "web", "payment_amount": 1e12}}""",
+    """{"event_type": "bill_payment", "event_time": "2025-06-04T12:05:00Z", "payload": {"customer_id": "c2", "session_id": 2, "channel": "web", "payment_amount": "12.50"}}""",
+    """{"event_type": "energy_consumed", "event_time": "2025-06-04T12:10:00Z", "payload": {"customer_id": "c1", "session_id": 1, "channel": "web", "energy_consumed": "99999999"}}""",
+    """{"event_type": "energy_consumed", "event_time": "2025-06-04T12:15:00Z", "payload": {"customer_id": "c2", "session_id": 2, "channel": "web", "energy_consumed": 3.25}}""")
+
+  private def assertOverflowSkipped(r: Row): Unit = {
+    assert(r.getAs[Long]("payment_events") == 2L)
+    assert(r.getAs[java.math.BigDecimal]("total_payments").doubleValue() == 12.5)
+    assert(r.getAs[java.math.BigDecimal]("total_energy_consumed").doubleValue() == 3.25)
+    assert(r.getAs[java.math.BigDecimal]("peak_hour_usage").doubleValue() == 3.25)
+  }
+
+  test("out-of-range amounts are NULLed in the raw table and skipped by the aggregate") {
+    val raw = EventsPipeline.rawEvents(
+      EventsPipeline.parseAndValidate(overflow.toDF("value"))).collect()
+    assert(raw.length == 4)
+    def amount(c: String, col: String) = raw.filter(r =>
+      r.getAs[String]("customer_id") == c && r.getAs[Any](col) != null)
+      .map(_.getAs[java.math.BigDecimal](col).doubleValue()).toSeq
+    assert(amount("c1", "payment_amount").isEmpty)
+    assert(amount("c1", "energy_consumed").isEmpty)
+    assert(amount("c2", "payment_amount") == Seq(12.5))
+    assert(amount("c2", "energy_consumed") == Seq(3.25))
+    val agg = hourly(overflow).collect()
+    assert(agg.length == 1)
+    assertOverflowSkipped(agg.head)
+  }
+
+  test("an out-of-range amount does not stop the stream") {
+    val in = tmpDir("graft-ovf-in")
+    val ckpt = tmpDir("graft-ovf-ckpt")
+    val out = tmpDir("graft-ovf-out")
+    Files.write(in.resolve("part0.jsonl"),
+      overflow.mkString("\n").getBytes("UTF-8"))
+    val q = EventsPipeline.start(spark, in.toString, ckpt.toString,
+      out.toString, Trigger.ProcessingTime("200 milliseconds"))
+    try {
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, q.exception)
+      val agg = EventsPipeline.readHourlyMetrics(spark, out.toString).collect()
+      assert(agg.length == 1)
+      assertOverflowSkipped(agg.head)
+    } finally q.stop()
   }
 
   test("hourly aggregate golden values for a green tariff switch (tests/test_consumer.py:54-63)") {
