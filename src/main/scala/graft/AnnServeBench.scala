@@ -6,7 +6,8 @@ import graft.util.Sessions
 /** ANN online-serving benchmark: build the persisted IVF-PQ index once,
   * then answer the registered query set as a STREAM of micro-batches
   * through `AnnIndexLayout.serveStream` and report queries/second —
-  * the serving-side complement to `StreamBench`'s ingest number.
+  * the serving-side complement to perfbench's `events_stream` ingest
+  * number.
   * Build time is reported separately: at 100 TB the build is the rare
   * nightly/delta job while serving is the steady state.
   */

@@ -9,9 +9,10 @@ import graft.util.Sessions
   * band index once over the corpus split, then stream the delta split
   * through `DedupIndexLayout.ingestStream` (check-then-append per
   * micro-batch) and report documents/second — the daily-crawl number
-  * next to `StreamBench`'s event ingest and `AnnServeBench`'s query
-  * serving. Build time reported separately: at 100 TB the full build
-  * happens once while the delta check-and-append is the steady state.
+  * next to perfbench's `events_stream` event ingest and
+  * `AnnServeBench`'s query serving. Build time reported separately: at
+  * 100 TB the full build happens once while the delta check-and-append
+  * is the steady state.
   */
 object DedupIngestBench {
   def main(args: Array[String]): Unit = {

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * swap file for Kafka without touching anything downstream.
   *
   * The file paths feed [[graft.streaming.EventsPipeline]] (exercised by
-  * StreamingSpec / StreamBench); the Kafka readers/writers need
-  * `spark-sql-kafka-0-10` on the classpath at deploy time and are not
-  * runnable in this offline environment.
+  * StreamingSpec and perfbench's `events_stream`); the Kafka
+  * readers/writers need `spark-sql-kafka-0-10` on the classpath at
+  * deploy time and are not runnable in this offline environment.
   */
 object EventSource {
 

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -201,6 +202,24 @@ object EventsPipeline {
     * ON CONFLICT upsert of consumer/consumer.py:321-367 without a
     * transactional store). Dead letters append under `outDir`/dead.
     *
+    * The aggregate keeps its state in ONE state store: its key is the
+    * hour and the 24 h watermark bounds the open hours to a few dozen
+    * rows, as the reference's single in-memory dict is (consumer/
+    * consumer.py:81-98), so more partitions would only add stores to
+    * commit, sink files to write and read, and tasks to schedule per
+    * batch. `spark.sql.shuffle.partitions` is set to 1 only while the
+    * query starts (the query clones the session then, and its first
+    * batch records the count in the offset log, so a restart keeps the
+    * count its checkpoint recorded), and the caller's value is put back,
+    * or unset if the caller had none. The query runs on the caller's
+    * session, so listeners on `spark.streams` see it; another thread
+    * planning on the same session while `start` runs would see the
+    * count of 1.
+    *
+    * Each batch writes one sink file, and its stamps (`stamped`) leave
+    * the generated code unchanged, so a steady batch compiles no new
+    * classes.
+    *
     * Returns the aggregate query; call `processAllAvailable()`/`stop()`
     * or awaitTermination on it.
     */
@@ -224,17 +243,22 @@ object EventsPipeline {
     val agg = hourlyMetrics(
       rawEvents(validated).withWatermark("event_time", "24 hours"))
 
-    agg.writeStream
+    val partitions = SQLConf.SHUFFLE_PARTITIONS.key
+    val callers = spark.conf.getAll.get(partitions)
+    spark.conf.set(partitions, 1L)
+    try agg.writeStream
       .outputMode("update")
       .option("checkpointLocation", s"$checkpointDir/agg")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        batch.withColumn("batch_epoch", lit(epoch))
-          .withColumn("updated_at", current_timestamp())
-          .write.mode("append").parquet(s"$outDir/hourly_business_metrics")
+        stamped(batch, epoch).write.mode("append").parquet(sinkPath(outDir))
         ()
       }
       .start()
+    finally callers match {
+      case Some(v) => spark.conf.set(partitions, v)
+      case None => spark.conf.unset(partitions)
+    }
   }
 
   /** Dead-letter sink as its own query (shares the source). */
@@ -270,12 +294,51 @@ object EventsPipeline {
     * table after its additive merges, modulo the documented
     * true-distinct divergence). Ordered by (batch_epoch, updated_at)
     * so concurrent epoch spaces (stream batchIds vs backfill repairs)
-    * resolve deterministically to the later write. */
-  def readHourlyMetrics(spark: SparkSession, outDir: String): DataFrame = {
-    val df = spark.read.parquet(s"$outDir/hourly_business_metrics")
-    df.withColumn("rn", row_number().over(latestVersion))
+    * resolve deterministically to the later write.
+    *
+    * The sink is read with its known schema (`sinkSchema`), so a read
+    * runs no footer-inference job, and a sink directory that holds no
+    * data file yet (a first flush that never committed leaves only
+    * `_temporary/`) reads as empty. A missing directory still fails
+    * with `PATH_NOT_FOUND`. */
+  def readHourlyMetrics(spark: SparkSession, outDir: String): DataFrame =
+    readSink(spark, outDir)
+      .withColumn("rn", row_number().over(latestVersion))
       .filter(col("rn") === 1)
       .drop("rn", "batch_epoch", "updated_at")
+
+  private def sinkPath(outDir: String): String = s"$outDir/hourly_business_metrics"
+
+  /** Every row version in the upsert sink. */
+  private def readSink(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.schema(sinkSchema(spark)).parquet(sinkPath(outDir))
+
+  /** The upsert sink's columns: [[hourlyMetrics]] then the two stamps.
+    * They follow from the pipeline's own definitions alone, so they are
+    * derived once, from the pipeline over an empty input. */
+  private[streaming] def sinkSchema(spark: SparkSession): StructType =
+    sinkSchemaOnce.updateAndGet { known =>
+      if (known != null) known
+      else {
+        val noLines = spark.createDataFrame(java.util.List.of[Row](),
+          StructType(Seq(StructField("value", StringType))))
+        stamped(hourlyMetrics(rawEvents(parseAndValidate(noLines))), 0L).schema
+      }
+    }
+
+  private val sinkSchemaOnce =
+    new java.util.concurrent.atomic.AtomicReference[StructType]()
+
+  /** Tag one write to the sink with its `batch_epoch` and its
+    * `updated_at` (taken here, once per write). Both are passed to the
+    * write by reference, through nondeterministic zero-argument UDFs
+    * that constant folding leaves alone: a literal is written into the
+    * sink projection's generated code, so each batch's new values would
+    * compile new classes. */
+  private def stamped(df: DataFrame, epoch: Long): DataFrame = {
+    val now = java.sql.Timestamp.from(java.time.Instant.now)
+    df.withColumn("batch_epoch", udf(() => epoch).asNondeterministic()())
+      .withColumn("updated_at", udf(() => now).asNondeterministic()())
   }
 
   /** Batch backfill of the upsert sink for an hour range — the repair
@@ -301,29 +364,27 @@ object EventsPipeline {
     * re-flushes an hour when new events arrived for it).
     *
     * Bootstraps cleanly: a sink directory that has never been written
-    * (repairing an outage that predates any stream flush) starts the
-    * epoch space at 0 instead of failing the read. */
+    * (repairing an outage that predates any stream flush), or that holds
+    * no data file yet, starts the epoch space at 0 instead of failing
+    * the read. */
   def backfillHourlyMetrics(spark: SparkSession, inputDir: String,
       outDir: String, fromHour: String, toHour: String): Long = {
     import org.apache.hadoop.fs.Path
-    val path = s"$outDir/hourly_business_metrics"
     val from = lit(fromHour).cast(TimestampType)
     val to = lit(toHour).cast(TimestampType)
     val repaired = batchHourlyMetrics(spark, inputDir)
       .filter(col("hour") >= from && col("hour") < to)
-    val sink = new Path(path)
+    val sink = new Path(sinkPath(outDir))
     val fs = sink.getFileSystem(spark.sessionState.newHadoopConf())
     val maxEpoch =
       if (!fs.exists(sink)) -1L
-      else spark.read.parquet(path)
+      else readSink(spark, outDir)
         .agg(max(col("batch_epoch"))).first() match {
           case r if r.isNullAt(0) => -1L
           case r => r.getLong(0)
         }
     val epoch = maxEpoch + 1
-    repaired.withColumn("batch_epoch", lit(epoch))
-      .withColumn("updated_at", current_timestamp())
-      .write.mode("append").parquet(path)
+    stamped(repaired, epoch).write.mode("append").parquet(sinkPath(outDir))
     epoch
   }
 
@@ -363,8 +424,8 @@ object EventsPipeline {
     * after (CheckpointResumeSpec asserts this). */
   def compactHourlyMetrics(spark: SparkSession, outDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val path = s"$outDir/hourly_business_metrics"
-    val compacted = spark.read.parquet(path)
+    val path = sinkPath(outDir)
+    val compacted = readSink(spark, outDir)
       .withColumn("rn", row_number().over(latestVersion))
       .filter(col("rn") === 1)
       .drop("rn")

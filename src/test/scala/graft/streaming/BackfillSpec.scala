@@ -74,4 +74,38 @@ class BackfillSpec extends SparkSpec {
     assert(latestEpochs("2025-06-04 13:00:00.0") == epoch)
     assert(latestEpochs("2025-06-04 14:00:00.0") < epoch)
   }
+
+  test("a sink with no data file yet reads as empty and backfills from epoch 0") {
+    // a first flush that never committed leaves only the writer's
+    // `_temporary/` in the sink directory
+    val out = tmpDir("graft-bf-empty")
+    Files.createDirectories(out.resolve("hourly_business_metrics/_temporary/0"))
+    assert(EventsPipeline.readHourlyMetrics(spark, out.toString).count() == 0)
+
+    val in = tmpDir("graft-bf-empty-in")
+    Files.write(in.resolve("part1.jsonl"), onTime.mkString("\n").getBytes("UTF-8"))
+    val epoch = EventsPipeline.backfillHourlyMetrics(spark, in.toString,
+      out.toString, "2025-06-04 12:00:00", "2025-06-04 14:00:00")
+    assert(epoch == 0L)
+    assert(EventsPipeline.readHourlyMetrics(spark, out.toString).count() == 2)
+  }
+
+  test("a missing sink still fails the read loudly") {
+    val out = tmpDir("graft-bf-none")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      EventsPipeline.readHourlyMetrics(spark, out.toString).collect())
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  test("the derived sink schema is the schema of a written sink") {
+    val in = tmpDir("graft-bf-schema-in")
+    val out = tmpDir("graft-bf-schema-out")
+    Files.write(in.resolve("part1.jsonl"), onTime.mkString("\n").getBytes("UTF-8"))
+    EventsPipeline.start(spark, in.toString, tmpDir("graft-bf-schema-ck").toString,
+      out.toString, Trigger.AvailableNow()).awaitTermination()
+    def namesAndTypes(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => f.name -> f.dataType).toSeq
+    val inferred = spark.read.parquet(s"$out/hourly_business_metrics").schema
+    assert(namesAndTypes(EventsPipeline.sinkSchema(spark)) == namesAndTypes(inferred))
+  }
 }
