@@ -2344,6 +2344,17 @@ object SimilarityQueries {
     // the one released-checkpoint job fills each cache exactly once in
     // dependency order — the two count() fences were two extra full
     // passes over the cached frames plus two scheduler barriers.
+    // The limit that buys: with no fence and AQE off, the whole
+    // two-pass chain (stage A, the persisted deflation pass, stage B)
+    // runs inside the build of the outermost broadcast, so
+    // `spark.sql.broadcastTimeout` bounds all of it. That is Spark's
+    // default 300 s; no session regime here (Bench, Verify,
+    // util/Sessions, the test session) sets it. All of them run AQE
+    // (Spark's default), which materializes the chain bottom-up as
+    // separate stages and times each broadcast's own build only: at
+    // sf0.1, local[4], a 1 s timeout failed the 3-10 s chain with AQE
+    // off and passed with it on. A session with AQE off needs a fence
+    // back, or a timeout above the chain, once the corpus outgrows it.
     val v1f = pca2StageA(spark, dir)
     val defl = pca2DeflBase(spark, dir, v1f).persist()
     val p2 = pca2StageB(

@@ -52,9 +52,14 @@ private[sources] object DeltaIndex {
       t.id)
 
   /** The stream-to-batch bridge: run `body` per micro-batch inside
-    * `foreachBatch`, checkpointed at `checkpoint` when given. */
+    * `foreachBatch`, checkpointed at `checkpoint` when given, through
+    * the fork-free manager every stream starter installs
+    * ([[graft.util.ForkFreeFs.install]]). The bucketed appends in `body`
+    * write catalog tables, which still fork through the session's
+    * cached file system. */
   def stream(source: DataFrame, checkpoint: Option[String] = None)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.util.ForkFreeFs.install(source.sparkSession)
     val w = source.writeStream
     checkpoint.foreach(c => w.option("checkpointLocation", c))
     w.foreachBatch(body).start()

@@ -6,6 +6,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.util.ForkFreeFs
+
 /** The reference's streaming core, rebuilt on Structured Streaming.
   *
   * Reference pipeline (sejalv/energy-data-stream-processing): a Kafka
@@ -220,6 +222,18 @@ object EventsPipeline {
     * the generated code unchanged, so a steady batch compiles no new
     * classes.
     *
+    * A batch starts no child process. With no libhadoop on the
+    * classpath, Hadoop's local file system forks `chmod` for every file
+    * and directory it creates, and Spark's default checkpoint manager
+    * forks `readlink` four times per checkpoint rename: over a thousand
+    * forks in a 12 s replay, milliseconds each. `start` sets
+    * [[ForkFreeFs]]'s checkpoint manager on the caller's session and
+    * leaves it set (the file source opens its log later, on the stream
+    * thread, from this session; a manager the caller chose is kept), and
+    * the flush writes through its local file system (`writeSink`). The
+    * session's cached file system still forks: catalog table writes and
+    * the dead-letter file sink's data files go through it.
+    *
     * Returns the aggregate query; call `processAllAvailable()`/`stop()`
     * or awaitTermination on it.
     */
@@ -243,6 +257,7 @@ object EventsPipeline {
     val agg = hourlyMetrics(
       rawEvents(validated).withWatermark("event_time", "24 hours"))
 
+    ForkFreeFs.install(spark)
     val partitions = SQLConf.SHUFFLE_PARTITIONS.key
     val callers = spark.conf.getAll.get(partitions)
     spark.conf.set(partitions, 1L)
@@ -251,8 +266,7 @@ object EventsPipeline {
       .option("checkpointLocation", s"$checkpointDir/agg")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        stamped(batch, epoch).write.mode("append").parquet(sinkPath(outDir))
-        ()
+        writeSink(stamped(batch, epoch), "append", sinkPath(outDir))
       }
       .start()
     finally callers match {
@@ -267,7 +281,8 @@ object EventsPipeline {
       inputDir: String,
       checkpointDir: String,
       outDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery = {
+    ForkFreeFs.install(spark)
     deadLetter(parseAndValidate(
       graft.sources.EventSource.fileStream(spark, inputDir)))
       .writeStream
@@ -277,6 +292,7 @@ object EventsPipeline {
       .format("json")
       .option("path", s"$outDir/dead_letter")
       .start()
+  }
 
   /** Last-write-wins ordering over the upsert sink's row versions.
     * `batch_epoch` alone is NOT total: a backfill allocates
@@ -328,6 +344,13 @@ object EventsPipeline {
 
   private val sinkSchemaOnce =
     new java.util.concurrent.atomic.AtomicReference[StructType]()
+
+  /** Every write to the upsert sink — the stream's flush, a backfill,
+    * a compaction: parquet through [[ForkFreeFs]]'s local file system,
+    * so its data files, `.crc`s and committer directories fork no
+    * `chmod`. */
+  private def writeSink(df: DataFrame, mode: String, path: String): Unit =
+    df.write.options(ForkFreeFs.options).mode(mode).parquet(path)
 
   /** Tag one write to the sink with its `batch_epoch` and its
     * `updated_at` (taken here, once per write). Both are passed to the
@@ -384,7 +407,7 @@ object EventsPipeline {
           case r => r.getLong(0)
         }
     val epoch = maxEpoch + 1
-    stamped(repaired, epoch).write.mode("append").parquet(sinkPath(outDir))
+    writeSink(stamped(repaired, epoch), "append", sinkPath(outDir))
     epoch
   }
 
@@ -435,7 +458,7 @@ object EventsPipeline {
     // resolve the SINK's filesystem, not the default one (outDir may be
     // s3a:// while the default FS is hdfs://)
     val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    compacted.write.mode("overwrite").parquet(tmp.toString)
+    writeSink(compacted, "overwrite", tmp.toString)
     fs.delete(old, true) // stale leftover from a previous crash
     require(fs.rename(dst, old), s"compaction: could not move $dst aside")
     if (!fs.rename(tmp, dst)) {
