@@ -9,9 +9,9 @@ import graft.util.Sessions
   * query and rep it prints the wall seconds split into build (query
   * construction, eager fences included) and plan, plus scheduler-level
   * counters (jobs launched, stages, tasks, summed task time, summed
-  * executor run+GC time) — separating driver/planning overhead from
-  * actual cluster work. `--explain` first prints each query's
-  * formatted physical plan.
+  * executor run+GC time, host steal ticks) — separating
+  * driver/planning overhead from actual cluster work. `--explain` first
+  * prints each query's formatted physical plan.
   *
   * Usage: runMain graft.Profile <q1,q2,...> [sfDir] [reps] [--explain]
   */
@@ -67,6 +67,7 @@ object Profile {
       }
       (1 to reps).foreach { i =>
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L; runMs = 0L; gcMs = 0L
+        val steal0 = graft.util.Steal.ticks()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val tBuild = System.nanoTime()
@@ -89,7 +90,8 @@ object Profile {
         println(f"[profile] $name rep $i: wall ${(tEnd - t0) / 1e9}%.2f s " +
           f"(build ${(tBuild - t0) / 1e9}%.2f plan ${(tPlan - tBuild) / 1e9}%.2f) " +
           f"rows $n jobs $jobs stages $stages " +
-          f"tasks $tasks taskSum ${taskMs / 1e3}%.1f s run ${runMs / 1e3}%.1f s gc ${gcMs / 1e3}%.1f s")
+          f"tasks $tasks taskSum ${taskMs / 1e3}%.1f s run ${runMs / 1e3}%.1f s gc ${gcMs / 1e3}%.1f s " +
+          f"steal ${graft.util.Steal.ticks() - steal0}")
       }
     }
     spark.stop()

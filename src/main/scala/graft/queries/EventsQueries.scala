@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,6 +32,8 @@ import graft.util.Tables._
   *
   * Every public query here has a DuckDB oracle twin; numeric conventions
   * are in [[graft.util.Tables]] (exact decimal sums, epoch-micros time).
+  * Every query reads the table through [[events]]: one partition when
+  * Spark plans it as one split, resolved once per file version.
   */
 object EventsQueries {
 
@@ -37,8 +41,63 @@ object EventsQueries {
   // Shared building blocks
   // ---------------------------------------------------------------------
 
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "events")
+  /** The `events` table as every query here reads it: the frame
+    * [[Tables.load]] returns, resolved once per file version and, when
+    * Spark plans the scan as one split, as `coalesce(1)`.
+    *
+    * One split: the split count is the planned scan's
+    * (`FileSourceScanExec.inputRDD`; driver-only, no job). A
+    * `SinglePartition` child satisfies every clustered, ordered and
+    * all-tuples distribution, so the planner adds no Exchange above the
+    * scan and a panel runs as one stage. No parallelism is lost: a
+    * one-split scan is one task already, and under graft.Bench's regime
+    * (`parallelismFirst=false`, 64 MB advisory size) AQE coalesced the
+    * post-shuffle stages of such an input to one partition anyway; the
+    * Exchanges only added a job, a stage and a serialize round each.
+    * Column pruning and pushed `ts` filters still reach the scan through
+    * the `Coalesce 1`. A multi-split table keeps the shuffled plan.
+    * An `Expand` or a `Union` resets the partitioning, so panels built
+    * on them still shuffle above it.
+    *
+    * Once per file version: resolving the relation infers the Parquet
+    * schema, one Spark job per call. The frame is kept per (session,
+    * directory) and reused while the leaf listing (path, length, mtime)
+    * is unchanged; a rewritten table is resolved again. The memo holds
+    * plans, not data: nothing enters the cache manager. Entries of a
+    * session whose context has stopped are dropped on the next call. */
+  private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
+    val files = leafFiles(spark, new Path(s"$dir/events.parquet"))
+    val key = (spark, dir)
+    val hit = Resolved.synchronized {
+      Resolved.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      Resolved.get(key).collect { case (seen, ev) if seen == files => ev }
+    }
+    hit.getOrElse {
+      val ev = Tables.load(spark, dir, "events")
+      val splits = ev.queryExecution.sparkPlan.collectFirst {
+        case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      }
+      val out = if (splits.contains(1)) ev.coalesce(1) else ev
+      Resolved.synchronized(Resolved(key) = (files, out))
+      out
+    }
+  }
+
+  private type Listing = Seq[(String, Long, Long)]
+
+  private val Resolved =
+    scala.collection.mutable.Map[(SparkSession, String), (Listing, DataFrame)]()
+
+  /** (path, length, mtime) of every file under `root`; empty when it
+    * does not exist, so [[Tables.load]] reports the missing table. */
+  private def leafFiles(spark: SparkSession, root: Path): Listing = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(p: Path): Listing = fs.listStatus(p).toSeq.flatMap { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    }
+    try walk(root) catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   /** Mid-period split instant (the testdata spans Jan 2024) — ONE
     * definition shared by every pre/post query (ev_business_kpis

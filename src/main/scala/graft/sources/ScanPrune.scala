@@ -82,12 +82,17 @@ private[graft] object ScanPrune {
     * inside the deeper composed-gate plan (the task thread enters the
     * recursive filter eval with less headroom there, so the safe depth
     * is plan-dependent — a constant at the observed failure point is
-    * not a bound). 1024 leaves ≥4× headroom under the shallowest
-    * observed failure on the default 1 MB task stack; larger sets keep
-    * the Catalyst INSET row filter and the bucket-set FILE pruning
-    * (neither goes through parquet's recursive filter tree) and forgo
-    * only the page-level layer. */
-  val MaxPushdownIn: Int = 1024
+    * not a bound). The next ceiling, 1024, overflowed as well: its
+    * PushdownCeilingSpec push needs more than 512 KB of task stack run
+    * alone (the spec fails under `-Xss512k`), and it overflowed the
+    * default 1 MB late in two full test runs in a row, so the stack a
+    * push needs depends on the JVM's state as well as on the plan (at
+    * 256 keys the spec passes alone under `-Xss384k`). 256 is a
+    * quarter of that shallowest failing depth on the default 1 MB task
+    * stack; larger sets keep the Catalyst INSET row filter and the
+    * bucket-set FILE pruning (neither goes through parquet's recursive
+    * filter tree) and forgo only the page-level layer. */
+  val MaxPushdownIn: Int = 256
 
   /** The branch bound as actually consulted — the session conf
     * `graft.scanprune.maxPushdownIn` can only LOWER it, never raise

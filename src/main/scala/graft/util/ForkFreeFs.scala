@@ -6,7 +6,7 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -30,7 +30,9 @@ import org.apache.spark.sql.internal.SQLConf
   *  - [[ForkFreeCheckpointFileManager]] is Spark's own
   *    `FileSystemBasedCheckpointFileManager` over it for `file:` paths:
   *    check that the target does not exist, then `rename(2)`, as the
-  *    default manager does. Other schemes get Spark's default manager.
+  *    default manager does; a create that loses to an existing target
+  *    also deletes its temp file. Other schemes get Spark's default
+  *    manager.
   *  - [[install]] sets it on a session; [[options]] are the Hadoop keys
   *    a `DataFrameWriter` takes to write through it.
   *
@@ -96,7 +98,7 @@ class ForkFreeCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
   private val inner: CheckpointFileManager =
     if (ForkFreeFs.isFile(path, hadoopConf))
-      new FileSystemBasedCheckpointFileManager(path, ForkFreeFs.withOptions(hadoopConf))
+      new ForkFreeCheckpointFileManager.Local(path, ForkFreeFs.withOptions(hadoopConf))
     else {
       val c = new Configuration(hadoopConf)
       c.unset(ForkFreeFs.ManagerKey)
@@ -114,4 +116,19 @@ class ForkFreeCheckpointFileManager(path: Path, hadoopConf: Configuration)
   override def isLocal: Boolean = inner.isLocal
   override def createCheckpointDirectory(): Path = inner.createCheckpointDirectory()
   override def close(): Unit = inner.close()
+}
+
+object ForkFreeCheckpointFileManager {
+
+  /** Spark's `FileSystemBasedCheckpointFileManager`, except that an
+    * atomic create which loses to an existing target
+    * (`overwriteIfPossible = false`) deletes its temp file and that
+    * file's `.crc` before the rethrow; Spark's rename-based stream
+    * leaves both behind. */
+  private final class Local(path: Path, conf: Configuration)
+      extends FileSystemBasedCheckpointFileManager(path, conf) {
+    override def renameTempFile(temp: Path, target: Path, overwriteIfPossible: Boolean): Unit =
+      try super.renameTempFile(temp, target, overwriteIfPossible)
+      catch { case e: FileAlreadyExistsException => delete(temp); throw e }
+  }
 }

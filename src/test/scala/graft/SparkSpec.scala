@@ -91,6 +91,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A fresh directory holding `srcDir`'s events table rewritten as
+    * `files` parquet files, same columns and physical types: Spark plans
+    * it as `files` splits where the one-file table is one. */
+  def multiSplitEvents(srcDir: String, files: Int): String = {
+    val out = tmpDir("graft-split").toString
+    // the raw columns as stored: a nanos `ts` stays int64 nanos, as
+    // graft.util.Tables.load expects to find it
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$srcDir/events.parquet").repartition(files)
+      .write.parquet(s"$out/events.parquet")
+    out
+  }
+
   def tmpDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     p.toFile.deleteOnExit()

@@ -13,23 +13,29 @@ class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def qe(q: String): org.apache.spark.sql.execution.QueryExecution = {
+  /** The same events as four files. At sf0.001 the events table is one
+    * split, which the `ev_*` queries read as one partition with no
+    * Exchange above the scan; the multi-split plan, the one a larger
+    * table gets, is pinned over this copy. */
+  private lazy val split4 = multiSplitEvents(dir, 4)
+
+  private def qe(q: String, at: String = dir): org.apache.spark.sql.execution.QueryExecution = {
     // queries that end in Tables.released() hand back a checkpointed
     // frame whose own plan is an RDD scan; the stash holds the
     // execution the checkpoint ran — pin that one
     graft.util.Tables.lastReleasedPlan = None
-    val df = graft.SparkEntry.queries(q)(spark, dir)
+    val df = graft.SparkEntry.queries(q)(spark, at)
     graft.util.Tables.lastReleasedPlan.getOrElse(df.queryExecution)
   }
 
-  private def plan(q: String): String = {
+  private def plan(q: String, at: String = dir): String = {
     // an already-executed adaptive plan prints BOTH its final and
     // initial sections — keep only the final one so node counts
     // aren't doubled for released() queries. Cut ONLY at the
     // top-level (column-0) marker: cached InMemoryRelations nest
     // their own adaptive sections at deeper indentation and those
     // must stay in the string.
-    val s = qe(q).executedPlan.toString
+    val s = qe(q, at).executedPlan.toString
     val cut = s.indexOf("\n+- == Initial Plan ==")
     if (cut >= 0) s.substring(0, cut) else s
   }
@@ -53,13 +59,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("hourly metrics: events scan pruned to referenced columns") {
-    val p = plan("ev_hourly_metrics")
+    val p = plan("ev_hourly_metrics", split4)
     assert(!p.contains("event_id"), p) // unused column not read
     assert(p.contains("partial_"), p)
   }
 
   test("as-of join: no join operator, exactly one hash shuffle (the key)") {
-    val p = plan("ev_asof_join")
+    val p = plan("ev_asof_join", split4)
     assert(p.contains("Window"), p)
     assert(!p.contains("Join"), p) // union+window sweep, not a range join
     val hashShuffles = "hashpartitioning\\(".r.findAllIn(p).length
@@ -67,12 +73,23 @@ class PlanSpec extends SparkSpec {
   }
 
   test("range join: equi-join on (key, bucket), never a nested-loop theta join") {
-    val p = plan("ev_range_join")
+    val p = plan("ev_range_join", split4)
     // the whole point of band bucketing: the |dt|<=tol predicate must
     // ride on an equi-join, not degenerate to BNLJ/cartesian per key
     assert(!p.contains("NestedLoop"), p)
     assert(!p.contains("Cartesian"), p)
     assert(p.contains("Join"), p)
+  }
+
+  test("one-split events: the scan is one partition and the panel plans no Exchange") {
+    // graft.Bench's static join regime: with the session default, the
+    // 27 KB range-join side would be a planned broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try for (q <- Seq("ev_asof_join", "ev_range_join", "ev_validation_summary")) {
+      val p = plan(q)
+      assert(p.contains("Coalesce 1"), s"$q:\n$p")
+      assert(!p.contains("Exchange"), s"$q:\n$p")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("frame sample: scan pruned to (doc_id, text); no shuffle before sort") {
@@ -100,7 +117,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stream interval join: equality is the join key, time bounds residual") {
-    val p = plan("ev_stream_interval_join")
+    val p = plan("ev_stream_interval_join", split4)
     assert(!p.contains("NestedLoop"), p)
     assert(!p.contains("Cartesian"), p)
     assert(p.contains("Join"), p)
@@ -297,7 +314,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("funnel sequences: groupBy reuses the window's user_id partitioning") {
-    val p = plan("ev_funnel_sequences")
+    val p = plan("ev_funnel_sequences", split4)
     // one hash shuffle total: the lead() window sorts within user_id
     // partitions and the per-user rollup must NOT re-shuffle
     val hashShuffles = "hashpartitioning\\(".r.findAllIn(p).length
@@ -319,7 +336,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dow-type cube: all four grouping sets expand into ONE shuffle") {
-    val p = plan("ev_dow_type_cube")
+    val p = plan("ev_dow_type_cube", split4)
     assert(p.contains("Expand"), p) // grouping-set expansion is the plan
     val hashShuffles = "hashpartitioning\\(".r.findAllIn(p).length
     assert(hashShuffles == 1, s"expected 1 hash shuffle, plan:\n$p")
@@ -408,7 +425,7 @@ class PlanSpec extends SparkSpec {
     // bounded domain joins; only the per-user firsts window (partitioned
     // by user_id) may remain.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
-    val opt = qe("ev_user_ranks").optimizedPlan
+    val opt = qe("ev_user_ranks", split4).optimizedPlan
     val global = opt.collect {
       case w: LogicalWindow if w.partitionSpec.isEmpty => w
     }
@@ -427,7 +444,7 @@ class PlanSpec extends SparkSpec {
     // there, so any LogicalRelation would be a real re-scan.
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val lp = graft.SparkEntry.queries("ev_retention_cohorts")(spark, dir)
+    val lp = graft.SparkEntry.queries("ev_retention_cohorts")(spark, split4)
       .queryExecution.optimizedPlan
     assert(lp.collect { case r: LogicalRDD => r }.nonEmpty, lp.toString)
     assert(lp.collect { case r: LogicalRelation => r }.isEmpty, lp.toString)
@@ -492,7 +509,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("anomaly-mad: percentiles run over the cached hourly grain, never raw events") {
-    val p = plan("ev_anomaly_mad")
+    val p = plan("ev_anomaly_mad", split4)
     // median/MAD enter as 1-row broadcasts over the persisted hourly
     // grain (the event FileScan appears only inside the cache's build
     // plan, pruned to the two referenced columns)
@@ -581,7 +598,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bootstrap CI: replicate means partial-combine; no resample shuffle") {
-    val p = plan("ev_bootstrap_ci")
+    val p = plan("ev_bootstrap_ci", split4)
     // the replicate explode feeds a 32-group aggregate whose partials
     // combine map-side — the Poisson bootstrap's whole point is that
     // no resampled dataset is ever materialized or shuffled
@@ -593,7 +610,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("transition matrix: one corpus shuffle (the user window); tiny rollup after") {
-    val p = plan("ev_transition_matrix")
+    val p = plan("ev_transition_matrix", split4)
     // the lead() window is the only corpus-scale exchange; the pair
     // rollup and row-normalizing window run on |types|^2 rows
     assert(p.contains("Window"), p)
@@ -659,7 +676,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sketch active users: one corpus pass, no user-grain expand") {
-    val p = plan("ev_active_users_approx")
+    val p = plan("ev_active_users_approx", split4)
     // the exact twin must explode the (day,user) grain 7x for WAU;
     // the sketch twin's explode multiplies |days| sketch ROWS only —
     // the corpus-grain stage is exactly one hll_sketch_agg aggregate
@@ -782,7 +799,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("type-day rollup: grouping sets run through Expand, aggregates partial") {
-    val p = plan("ev_type_day_rollup")
+    val p = plan("ev_type_day_rollup", split4)
     // the subtotal levels come from ONE Expand fan-out feeding one
     // aggregation — not three separate scans unioned
     assert(p.contains("Expand"), p)
@@ -792,7 +809,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("value quantiles: exact percentile is a partial-merge aggregate") {
-    val p = plan("ev_value_quantiles")
+    val p = plan("ev_value_quantiles", split4)
     // one shuffle on the bounded event_type grain; percentile buffers
     // merge map-side partials — no window, no global sort before the
     // final ORDER BY

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.queries.DedupQueries
 
-/** Regression net under `ScanPrune.MaxPushdownIn` (= 1024): the r17
+/** Regression net under `ScanPrune.MaxPushdownIn` (= 256): the r17
   * post-mortem's own argument is that parquet's recursive filter-eval
   * stack headroom is PLAN-DEPENDENT, so the ceiling must be exercised
   * where it is shallowest — the composed gate + contamination-sidecar
   * plan, the context in which 4096 was caught overflowing. This spec
   * drives `IngestGate.checkDelta` with a delta whose distinct shingle
   * key count is EXACTLY `MaxPushdownIn` (so the full eq-or-chain of
-  * 1024 literals is pushed into the sidecar scan inside the deepest
+  * that many literals is pushed into the sidecar scan inside the deepest
   * plan) and asserts (a) completion — a StackOverflowError here means
   * the ceiling must drop, with this spec as the evidence — and (b)
   * byte-equal verdicts vs the over-gate broadcast-semi-join branch

@@ -145,6 +145,12 @@ class ForkFreeFsSpec extends SparkSpec {
       write(1, overwrite = false)
       intercept[FileAlreadyExistsException](write(2, overwrite = false))
       assert(Files.readAllBytes(dir.resolve("a")).toSeq == Seq(1.toByte), fm)
+      // the losing temp file and its .crc are gone (Spark's own stream,
+      // under the stock manager, leaves both behind)
+      if (fm.isInstanceOf[ForkFreeCheckpointFileManager]) {
+        val left = dir.toFile.list().toSet
+        assert(left == Set("a", ".a.crc"), left)
+      }
       write(3, overwrite = true)
       assert(Files.readAllBytes(dir.resolve("a")).toSeq == Seq(3.toByte), fm)
       assert(Files.exists(dir.resolve(".a.crc")), fm)
