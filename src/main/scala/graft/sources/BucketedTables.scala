@@ -157,8 +157,8 @@ object BucketedTables {
     * index accumulates files per bucket and the read-side sort-skip
     * degrades; this maintenance pass rewrites the rows (unchanged)
     * into a fresh one-file-per-bucket layout with the SAME bucket
-    * spec, then swaps directories — the
-    * `EventsPipeline.compactHourlyMetrics` write-aside discipline.
+    * spec, then swaps directories: write the copy aside, then move the
+    * live directory aside and the copy into its place.
     *
     * Crash-safe at every step: the compacted copy is a fully written
     * managed table FIRST, then live -> aside, tmp -> live, aside

@@ -19,9 +19,9 @@ import graft.util.Tables
   *    sorted by `doc_id` — the stage-7 survivors JOINED BACK to their
   *    text: the frame a tokenize/pack/training job actually reads.
   *    Written with the write-aside + checked-rename swap
-  *    ([[BucketedTables.replaceBucketed]], the
-  *    `EventsPipeline.compactHourlyMetrics` discipline), so the docs
-  *    table ITSELF is atomic to readers and crash-safe.
+  *    ([[BucketedTables.replaceBucketed]]: the new table is written in
+  *    full beside the live one, then each rename is checked), so the
+  *    docs table ITSELF is atomic to readers and crash-safe.
   *  - `<prefix>_manifest` — the attrition table (stage, n_in,
   *    n_dropped, n_out, tokens_out) of the SAME chain invocation that
   *    produced the docs, so the written corpus can never drift from

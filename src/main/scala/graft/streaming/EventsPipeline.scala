@@ -1,6 +1,19 @@
 package graft.streaming
 
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -199,17 +212,36 @@ object EventsPipeline {
       graft.sources.EventSource.fileBatch(spark, inputDir))))
 
   /** Streaming run: file source -> validate split -> watermarked hourly
-    * aggregate -> idempotent upsert sink (parquet append tagged with
-    * batch epoch; readers take the latest epoch per hour — the
-    * ON CONFLICT upsert of consumer/consumer.py:321-367 without a
-    * transactional store). Dead letters append under `outDir`/dead.
+    * aggregate -> upsert sink. Dead letters append under `outDir`/dead.
+    *
+    * The sink is the reference's `hourly_business_metrics` table after
+    * its ON CONFLICT upserts (consumer/consumer.py:321-367): one row per
+    * hour. Each micro-batch collects its updated hours to the driver
+    * (a few dozen rows, bounded by the 24 h watermark; the stateful plan
+    * runs once, in that one job), merges them into the driver-held
+    * table of every hour the sink holds, and publishes the whole table
+    * as the next generation: one parquet file written from the driver,
+    * then named in the sink's generation log (`_generations`, Spark's
+    * own versioned metadata log). Merging keeps the sink's
+    * last-write-wins order, `(batch_epoch, updated_at)`: only the
+    * updated hours get the batch's stamps, carried-over hours keep
+    * theirs, and a replayed epoch re-merges to the same values. A batch
+    * with no rows (the no-data batch that follows a watermark move)
+    * publishes nothing. The log refuses a generation id that already
+    * exists, so a writer that lost a race to a concurrent publish (a
+    * backfill) reloads the table, merges again and publishes the next
+    * id. After each publish, generations older than the last
+    * `spark.sql.streaming.minBatchesToRetain` (default 100, the bound
+    * the checkpoint's own logs keep) are purged with their files, so
+    * the sink holds a bounded number of files however long the stream
+    * runs; a reader fails only if it outlives that many publishes.
     *
     * The aggregate keeps its state in ONE state store: its key is the
     * hour and the 24 h watermark bounds the open hours to a few dozen
     * rows, as the reference's single in-memory dict is (consumer/
     * consumer.py:81-98), so more partitions would only add stores to
-    * commit, sink files to write and read, and tasks to schedule per
-    * batch. `spark.sql.shuffle.partitions` is set to 1 only while the
+    * commit and tasks to schedule per batch.
+    * `spark.sql.shuffle.partitions` is set to 1 only while the
     * query starts (the query clones the session then, and its first
     * batch records the count in the offset log, so a restart keeps the
     * count its checkpoint recorded), and the caller's value is put back,
@@ -218,10 +250,6 @@ object EventsPipeline {
     * planning on the same session while `start` runs would see the
     * count of 1.
     *
-    * Each batch writes one sink file, and its stamps (`stamped`) leave
-    * the generated code unchanged, so a steady batch compiles no new
-    * classes.
-    *
     * A batch starts no child process. With no libhadoop on the
     * classpath, Hadoop's local file system forks `chmod` for every file
     * and directory it creates, and Spark's default checkpoint manager
@@ -229,10 +257,11 @@ object EventsPipeline {
     * forks in a 12 s replay, milliseconds each. `start` sets
     * [[ForkFreeFs]]'s checkpoint manager on the caller's session and
     * leaves it set (the file source opens its log later, on the stream
-    * thread, from this session; a manager the caller chose is kept), and
-    * the flush writes through its local file system (`writeSink`). The
-    * session's cached file system still forks: catalog table writes and
-    * the dead-letter file sink's data files go through it.
+    * thread, from this session; a manager the caller chose is kept); the
+    * generation log writes through it, and the generation file through
+    * its local file system. The session's cached file system still
+    * forks: catalog table writes and the dead-letter file sink's data
+    * files go through it.
     *
     * Returns the aggregate query; call `processAllAvailable()`/`stop()`
     * or awaitTermination on it.
@@ -266,7 +295,9 @@ object EventsPipeline {
       .option("checkpointLocation", s"$checkpointDir/agg")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        writeSink(stamped(batch, epoch), "append", sinkPath(outDir))
+        val rows = collectRows(batch)
+        if (rows.nonEmpty) publish(batch.sparkSession, sinkPath(outDir), rows.toSeq, _ => epoch)
+        ()
       }
       .start()
     finally callers match {
@@ -294,38 +325,63 @@ object EventsPipeline {
       .start()
   }
 
-  /** Last-write-wins ordering over the upsert sink's row versions.
+  /** Last-write-wins ordering over a sink's row versions, for a sink
+    * that no generation has been published to yet (written before the
+    * generation log existed: one file per flush, every row version kept).
     * `batch_epoch` alone is NOT total: a backfill allocates
     * max(batch_epoch)+1, and a stream restarted from its checkpoint
     * continues from the same batchId — a guaranteed tie. `updated_at`
     * (stamped by every writer at flush time) breaks the tie toward the
     * later write, which is exactly the sink's upsert contract: the most
-    * recently written state for an hour wins. */
+    * recently written state for an hour wins. [[newest]] is the same
+    * order, row by row. */
   private val latestVersion = org.apache.spark.sql.expressions.Window
     .partitionBy(col("hour"))
     .orderBy(col("batch_epoch").desc, col("updated_at").desc)
 
-  /** Latest-version-wins view over the upsert sink — what dashboards
-    * read (equivalent to the reference's hourly_business_metrics
-    * table after its additive merges, modulo the documented
-    * true-distinct divergence). Ordered by (batch_epoch, updated_at)
-    * so concurrent epoch spaces (stream batchIds vs backfill repairs)
-    * resolve deterministically to the later write.
+  /** The hourly table — what dashboards read (equivalent to the
+    * reference's hourly_business_metrics table after its additive
+    * merges, modulo the documented true-distinct divergence).
     *
-    * The sink is read with its known schema (`sinkSchema`), so a read
-    * runs no footer-inference job, and a sink directory that holds no
-    * data file yet (a first flush that never committed leaves only
-    * `_temporary/`) reads as empty. A missing directory still fails
-    * with `PATH_NOT_FOUND`. */
-  def readHourlyMetrics(spark: SparkSession, outDir: String): DataFrame =
-    readSink(spark, outDir)
-      .withColumn("rn", row_number().over(latestVersion))
-      .filter(col("rn") === 1)
-      .drop("rn", "batch_epoch", "updated_at")
+    * A sink with a published generation reads the one file the latest
+    * entry of its generation log names: it already holds one row per
+    * hour, so the read is one job of one task, with no window and no
+    * Exchange. `spark.read.parquet` over the sink directory returns every
+    * retained generation instead. A sink with no log, or no entry yet,
+    * reads as before the log existed: the latest version per hour by
+    * `(batch_epoch, updated_at)` over every data file, so a directory that
+    * holds no data file yet (a first flush that never committed leaves
+    * only `_temporary/`) reads as empty, and a missing directory fails
+    * with `PATH_NOT_FOUND`. The first publish over such a sink migrates
+    * it.
+    *
+    * Either way the sink is read with its known schema (`sinkSchema`),
+    * so a read runs no footer-inference job. */
+  def readHourlyMetrics(spark: SparkSession, outDir: String): DataFrame = {
+    val sink = new Path(sinkPath(outDir))
+    val log = new Path(sink, GenerationLog)
+    val live =
+      if (!log.getFileSystem(spark.sessionState.newHadoopConf()).exists(log)) None
+      else new HDFSMetadataLog[String](spark, log.toString).getLatest()
+    live match {
+      case Some((_, file)) =>
+        spark.read.schema(sinkSchema(spark)).parquet(new Path(sink, file).toString)
+          .drop("batch_epoch", "updated_at")
+      case None =>
+        readSink(spark, outDir)
+          .withColumn("rn", row_number().over(latestVersion))
+          .filter(col("rn") === 1)
+          .drop("rn", "batch_epoch", "updated_at")
+    }
+  }
 
   private def sinkPath(outDir: String): String = s"$outDir/hourly_business_metrics"
 
-  /** Every row version in the upsert sink. */
+  /** The generation log's directory inside the sink; Spark's file index
+    * skips `_` names, so a directory read never sees it. */
+  private val GenerationLog = "_generations"
+
+  /** Every row version in every data file of the sink. */
   private def readSink(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(sinkSchema(spark)).parquet(sinkPath(outDir))
 
@@ -338,30 +394,140 @@ object EventsPipeline {
       else {
         val noLines = spark.createDataFrame(java.util.List.of[Row](),
           StructType(Seq(StructField("value", StringType))))
-        stamped(hourlyMetrics(rawEvents(parseAndValidate(noLines))), 0L).schema
+        hourlyMetrics(rawEvents(parseAndValidate(noLines))).schema
+          .add(StructField("batch_epoch", LongType, nullable = false))
+          .add(StructField("updated_at", TimestampType))
       }
     }
 
   private val sinkSchemaOnce =
     new java.util.concurrent.atomic.AtomicReference[StructType]()
 
-  /** Every write to the upsert sink — the stream's flush, a backfill,
-    * a compaction: parquet through [[ForkFreeFs]]'s local file system,
-    * so its data files, `.crc`s and committer directories fork no
-    * `chmod`. */
-  private def writeSink(df: DataFrame, mode: String, path: String): Unit =
-    df.write.options(ForkFreeFs.options).mode(mode).parquet(path)
+  /** A frame's rows on the driver, as Spark's internal rows: the one job
+    * a flush runs. */
+  private def collectRows(df: DataFrame): Array[InternalRow] =
+    df.queryExecution.toRdd.map(_.copy()).collect()
 
-  /** Tag one write to the sink with its `batch_epoch` and its
-    * `updated_at` (taken here, once per write). Both are passed to the
-    * write by reference, through nondeterministic zero-argument UDFs
-    * that constant folding leaves alone: a literal is written into the
-    * sink projection's generated code, so each batch's new values would
-    * compile new classes. */
-  private def stamped(df: DataFrame, epoch: Long): DataFrame = {
-    val now = java.sql.Timestamp.from(java.time.Instant.now)
-    df.withColumn("batch_epoch", udf(() => epoch).asNondeterministic()())
-      .withColumn("updated_at", udf(() => now).asNondeterministic()())
+  /** The live table of one sink as last published or loaded here: its
+    * generation (-1: none yet), the file that generation names, and each
+    * hour's row in the sink's schema, by `hour` in microseconds. */
+  private final case class LiveTable(gen: Long, file: String, rows: Map[Long, InternalRow])
+
+  /** The live table of every sink this JVM has published to, by
+    * qualified sink path; checked against the generation log's latest
+    * entry before each use. */
+  private val liveTables = new ConcurrentHashMap[String, LiveTable]()
+
+  /** Called with the sink path after a generation file is in place and
+    * before its log entry is added; a test sets it to publish
+    * concurrently there. */
+  private[streaming] val beforeAdd = new AtomicReference[String => Unit](_ => ())
+
+  /** `t` with `r` as its row for `r`'s hour unless the row it holds is
+    * later by `(batch_epoch, updated_at)`: the sink's last-write-wins
+    * order. */
+  private def newest(t: Map[Long, InternalRow], r: InternalRow): Map[Long, InternalRow] = {
+    val (e, u) = (r.numFields - 2, r.numFields - 1)
+    t.get(r.getLong(0)) match {
+      case Some(o) if o.getLong(e) > r.getLong(e) ||
+          (o.getLong(e) == r.getLong(e) && o.getLong(u) > r.getLong(u)) => t
+      case _ => t.updated(r.getLong(0), r)
+    }
+  }
+
+  /** Publish `updates` (rows of [[hourlyMetrics]]) to the sink at `sink`:
+    * merge them into its live table, stamped with
+    * `epochOf(the table's largest epoch, -1 if none)` and the time of
+    * the merge, write the whole table as the next generation's file and
+    * add that generation to the log. A refused add (another writer
+    * published that id first) deletes the file, and the merge is made
+    * again over the newer table. Returns the epoch stamped. */
+  private def publish(spark: SparkSession, sink: String, updates: Seq[InternalRow],
+      epochOf: Long => Long): Long = {
+    val dir = new Path(sink)
+    val conf = spark.sessionState.newHadoopConfWithOptions(ForkFreeFs.options)
+    val fs = dir.getFileSystem(conf)
+    val key = fs.makeQualified(dir).toString
+    val log = new HDFSMetadataLog[String](spark, new Path(dir, GenerationLog).toString)
+    val types = sinkSchema(spark).map(_.dataType).dropRight(2)
+    var published: Option[Long] = None
+    while (published.isEmpty) {
+      val live = log.getLatest() match {
+        case Some((gen, file)) =>
+          Option(liveTables.get(key)).filter(t => t.gen == gen && t.file == file)
+            .getOrElse(LiveTable(gen, file, load(spark, Seq(new Path(dir, file)))))
+        case None => // a sink written before the log existed, or a new one
+          LiveTable(-1L, "", load(spark, dataFiles(fs, dir).filter(generationOf(_).isEmpty)))
+      }
+      val epoch = epochOf(live.rows.valuesIterator.map(r => r.getLong(r.numFields - 2))
+        .maxOption.getOrElse(-1L))
+      val now = ChronoUnit.MICROS.between(Instant.EPOCH, Instant.now)
+      val rows = updates.foldLeft(live.rows) { (t, u) =>
+        newest(t, InternalRow.fromSeq(u.toSeq(types) :+ epoch :+ now))
+      }
+      val gen = live.gen + 1
+      val file = writeGeneration(spark, conf, fs, dir, gen, rows)
+      beforeAdd.get()(sink)
+      val added = try log.add(gen, file)
+        catch { case _: java.util.ConcurrentModificationException => false }
+      if (!added) fs.delete(new Path(dir, file), false)
+      else {
+        liveTables.put(key, LiveTable(gen, file, rows))
+        val oldest = gen - spark.sessionState.conf.minBatchesToRetain + 1
+        if (oldest > 0) {
+          log.purge(oldest)
+          dataFiles(fs, dir).filter(generationOf(_).exists(_ < oldest))
+            .foreach(fs.delete(_, false))
+        }
+        published = Some(epoch)
+      }
+    }
+    published.get
+  }
+
+  /** Every row of `files` (sink schema), latest version per hour. */
+  private def load(spark: SparkSession, files: Seq[Path]): Map[Long, InternalRow] =
+    if (files.isEmpty) Map.empty
+    else collectRows(spark.read.schema(sinkSchema(spark)).parquet(files.map(_.toString): _*))
+      .foldLeft(Map.empty[Long, InternalRow])(newest)
+
+  /** The top-level data files of a sink: files whose names Spark's file
+    * index does not skip. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+
+  private val GenerationFile = """part-g(\d+)-.*""".r
+
+  /** The generation a data file was written for, if a publish wrote it. */
+  private def generationOf(p: Path): Option[Long] = p.getName match {
+    case GenerationFile(g) => Some(g.toLong)
+    case _ => None
+  }
+
+  /** Write `rows` as generation `gen`'s parquet file in `dir`, from the
+    * driver, with the writer Spark's `FileFormatWriter` uses per task:
+    * first under a `_` temp name (which neither Spark's file index nor a
+    * `*.parquet` listing sees), then renamed to `part-g<gen>-<uuid>` with
+    * the writer's extension. Returns the file's name. */
+  private def writeGeneration(spark: SparkSession, conf: Configuration, fs: FileSystem,
+      dir: Path, gen: Long, rows: Map[Long, InternalRow]): String = {
+    val schema = sinkSchema(spark)
+    val job = Job.getInstance(conf)
+    val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-g$gen-${UUID.randomUUID}${writers.getFileExtension(task)}"
+    val tmp = new Path(dir, s"_$name.tmp")
+    try {
+      val w = writers.newInstance(tmp.toString, schema, task)
+      try rows.toSeq.sortBy(_._1).foreach { case (_, r) => w.write(r) } finally w.close()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"could not rename $tmp to $name")
+    } catch {
+      case e: Throwable => fs.delete(tmp, false); throw e
+    }
+    name
   }
 
   /** Batch backfill of the upsert sink for an hour range — the repair
@@ -370,45 +536,31 @@ object EventsPipeline {
     * from the reference, which accepts them forever), a bug fixed after
     * the fact, or an outage gap. Recompute [from, to) from the raw
     * input in BATCH (the semantic ground truth the stream is spec'd
-    * against) and append it with an epoch above every existing one, so
-    * [[readHourlyMetrics]]'s latest-epoch-wins view atomically prefers
-    * the repaired rows — the same supersede mechanism the streaming
-    * upserts use, no in-place rewrite, safe to run while readers are
-    * live (unlike [[compactHourlyMetrics]], nothing is moved or
-    * deleted; a later compaction collapses the superseded versions).
-    * Safe to run against a LIVE stream too, with one caveat the epoch
-    * space forces: a stream restarted from its checkpoint continues
-    * from its own batchId, so the backfill's max(batch_epoch)+1 CAN
-    * collide with the stream's next flush. The ordering in
-    * [[readHourlyMetrics]]/[[compactHourlyMetrics]] is therefore total
-    * over (batch_epoch, updated_at): on an epoch tie the later WRITE
-    * wins, which for hours inside the backfilled range is exactly the
-    * stream's own newest-state-wins contract (the stream only
-    * re-flushes an hour when new events arrived for it).
+    * against) and publish it as the sink's next generation, the way a
+    * stream batch does, stamped with an epoch above every one the table
+    * holds: the repaired hours supersede the stream's rows, the other
+    * hours keep theirs, and readers switch from one complete table to
+    * the next. Safe to run against a LIVE stream: the generation log
+    * refuses a second publish of one id, so whichever of the two
+    * publishes second merges over the other's table. A stream restarted
+    * from its checkpoint continues from its own batchId, so the
+    * backfill's max(batch_epoch)+1 CAN equal the stream's next epoch; on
+    * that tie the later WRITE wins (`updated_at`), which for hours inside
+    * the backfilled range is exactly the stream's own newest-state-wins
+    * contract (the stream only re-flushes an hour when new events
+    * arrived for it).
     *
     * Bootstraps cleanly: a sink directory that has never been written
     * (repairing an outage that predates any stream flush), or that holds
-    * no data file yet, starts the epoch space at 0 instead of failing
-    * the read. */
+    * no data file yet, starts the epoch space at 0. */
   def backfillHourlyMetrics(spark: SparkSession, inputDir: String,
       outDir: String, fromHour: String, toHour: String): Long = {
-    import org.apache.hadoop.fs.Path
     val from = lit(fromHour).cast(TimestampType)
     val to = lit(toHour).cast(TimestampType)
     val repaired = batchHourlyMetrics(spark, inputDir)
       .filter(col("hour") >= from && col("hour") < to)
-    val sink = new Path(sinkPath(outDir))
-    val fs = sink.getFileSystem(spark.sessionState.newHadoopConf())
-    val maxEpoch =
-      if (!fs.exists(sink)) -1L
-      else readSink(spark, outDir)
-        .agg(max(col("batch_epoch"))).first() match {
-          case r if r.isNullAt(0) => -1L
-          case r => r.getLong(0)
-        }
-    val epoch = maxEpoch + 1
-    writeSink(stamped(repaired, epoch), "append", sinkPath(outDir))
-    epoch
+    ForkFreeFs.install(spark)
+    publish(spark, sinkPath(outDir), collectRows(repaired), _ + 1)
   }
 
   /** Robust anomaly audit OVER THE STREAMING SINK: the oracle-checked
@@ -426,46 +578,31 @@ object EventsPipeline {
           (col("total_payments") * lit(1000000))
             .cast(org.apache.spark.sql.types.LongType).as("x_micro")))
 
-  /** Compact the append-only upsert sink: collapse every hour to its
-    * latest epoch and swap the table directory. Long-running streams
-    * otherwise accumulate one superseded row-version per hour per
-    * flush — at cluster scale the reader's latest-epoch window grows
-    * linearly with uptime until a compaction pass re-bounds it (the
-    * parquet analog of Postgres vacuum after the reference's
-    * ON CONFLICT churn).
-    *
-    * Run it in a maintenance window with the stream STOPPED (stop the
-    * query, compact, restart from the checkpoint): plain parquet
-    * directories have no commit protocol, so a flush landing between
-    * the snapshot read and the swap would be lost, and a reader racing
-    * the swap can observe the move. The swap itself never leaves the
-    * data unrecoverable: the compacted copy is fully written first,
-    * then old -> aside, tmp -> live, aside deleted — a crash at any
-    * point leaves at least one complete directory on disk. Each rename
-    * result is checked (HDFS reports failure by returning false, not
-    * throwing). [[readHourlyMetrics]] results are identical before and
-    * after (CheckpointResumeSpec asserts this). */
+  /** Compact the upsert sink: drop every generation but the live one,
+    * then delete every top-level data file that the live generation
+    * does not name: a crashed publish's file (renamed but never logged)
+    * and the one-file-per-flush data of a sink written before the
+    * generation log existed, which a first publish here migrates (the
+    * parquet analog of Postgres vacuum after the reference's ON CONFLICT
+    * churn). Files of a generation above the live one are kept: a
+    * concurrent publish has renamed them and not yet logged them.
+    * Safe while the stream runs; [[readHourlyMetrics]] results are
+    * identical before and after (CheckpointResumeSpec asserts this). A
+    * reader still scanning a superseded generation's file when this
+    * drops it fails loudly. A missing sink is left missing. */
   def compactHourlyMetrics(spark: SparkSession, outDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val path = sinkPath(outDir)
-    val compacted = readSink(spark, outDir)
-      .withColumn("rn", row_number().over(latestVersion))
-      .filter(col("rn") === 1)
-      .drop("rn")
-    val dst = new Path(path)
-    val tmp = new Path(s"$path.compact.tmp")
-    val old = new Path(s"$path.compact.old")
-    // resolve the SINK's filesystem, not the default one (outDir may be
-    // s3a:// while the default FS is hdfs://)
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    writeSink(compacted, "overwrite", tmp.toString)
-    fs.delete(old, true) // stale leftover from a previous crash
-    require(fs.rename(dst, old), s"compaction: could not move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      // restore the original table before failing
-      fs.rename(old, dst)
-      throw new IllegalStateException(s"compaction: could not swap in $tmp")
+    val sink = sinkPath(outDir)
+    val dir = new Path(sink)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConfWithOptions(ForkFreeFs.options))
+    if (fs.exists(dir)) {
+      ForkFreeFs.install(spark)
+      val log = new HDFSMetadataLog[String](spark, new Path(dir, GenerationLog).toString)
+      if (log.getLatest().isEmpty) publish(spark, sink, Nil, identity)
+      val (gen, live) = log.getLatest().get
+      log.purge(gen)
+      dataFiles(fs, dir)
+        .filter(p => p.getName != live && !generationOf(p).exists(_ > gen))
+        .foreach(fs.delete(_, false))
     }
-    fs.delete(old, true)
   }
 }

@@ -74,6 +74,7 @@ class ForkFreeFsSpec extends SparkSpec {
       (1 to 3).foreach(_ => hourly(session, out))
       EventsPipeline.backfillHourlyMetrics(session, in.toString, out.toString,
         "2025-06-04 00:00:00", "2025-06-05 00:00:00")
+      EventsPipeline.compactHourlyMetrics(session, out.toString)
     }
     // a JVM's first session runs one-time probes (Hadoop's `setsid`
     // check, the executor's page size); they fork outside the file system
