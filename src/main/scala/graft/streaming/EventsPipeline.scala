@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.math.{BigDecimal => JBigDecimal}
 import java.time.Instant
 import java.time.temporal.ChronoUnit
 import java.util.UUID
@@ -13,9 +14,9 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+import org.apache.spark.sql.execution.streaming.checkpointing.{HDFSMetadataLog, OffsetSeqLog}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -30,13 +31,16 @@ import graft.util.ForkFreeFs
   * 30 s (:296-391); invalid events go to an error log with a reason
   * (:76-79, 125-128).
   *
-  * Spark mapping: one declarative pipeline per sink —
-  * `lines -> parse/validate split -> (a) raw append, (b) dead-letter
-  * append, (c) withWatermark(24h).groupBy(window 1h).agg(16 metrics)
-  * -> foreachBatch upsert`. The partial/final aggregation split the
-  * reference hand-codes (HourlyStats dict + ON CONFLICT merge) is
-  * Spark's own partial agg + state store; the thread/lock machinery
-  * has no equivalent because the state store owns it.
+  * Spark mapping: `lines -> parse/validate split -> (a) dead-letter
+  * append ([[startDeadLetter]]), (b) valid events withWatermark(24h) ->
+  * foreachBatch upsert` ([[start]]). The partial/final split the
+  * reference hand-codes (HourlyStats dict + ON CONFLICT merge) is kept:
+  * each task folds its rows into per-hour [[HourlyStats]] partials, and
+  * the driver merges them into the open hours it keeps beside the
+  * published table, as the reference's consumer merges into its dict.
+  * The flush thread and its lock have no equivalent: each micro-batch
+  * publishes. The raw `events` insert (:186-237) has no streaming
+  * counterpart (README, "Deliberate divergences").
   *
   * Documented divergences (SURVEY.md §7.1):
   *  - events >24h late are dropped by the watermark (the reference
@@ -211,44 +215,47 @@ object EventsPipeline {
     hourlyMetrics(rawEvents(parseAndValidate(
       graft.sources.EventSource.fileBatch(spark, inputDir))))
 
-  /** Streaming run: file source -> validate split -> watermarked hourly
-    * aggregate -> upsert sink. Dead letters append under `outDir`/dead.
+  /** Streaming run: file source -> validate split -> watermarked valid
+    * events -> per-hour partials -> upsert sink. Dead letters append under
+    * `outDir`/dead.
     *
     * The sink is the reference's `hourly_business_metrics` table after
     * its ON CONFLICT upserts (consumer/consumer.py:321-367): one row per
-    * hour. Each micro-batch collects its updated hours to the driver
-    * (a few dozen rows, bounded by the 24 h watermark; the stateful plan
-    * runs once, in that one job), merges them into the driver-held
-    * table of every hour the sink holds, and publishes the whole table
-    * as the next generation: one parquet file written from the driver,
-    * then named in the sink's generation log (`_generations`, Spark's
-    * own versioned metadata log). Merging keeps the sink's
-    * last-write-wins order, `(batch_epoch, updated_at)`: only the
-    * updated hours get the batch's stamps, carried-over hours keep
-    * theirs, and a replayed epoch re-merges to the same values. A batch
-    * with no rows (the no-data batch that follows a watermark move)
-    * publishes nothing. The log refuses a generation id that already
-    * exists, so a writer that lost a race to a concurrent publish (a
-    * backfill) reloads the table, merges again and publishes the next
-    * id. After each publish, generations older than the last
-    * `spark.sql.streaming.minBatchesToRetain` (default 100, the bound
-    * the checkpoint's own logs keep) are purged with their files, so
-    * the sink holds a bounded number of files however long the stream
-    * runs; a reader fails only if it outlives that many publishes.
+    * hour. The query itself is stateless: each micro-batch runs one job
+    * of one stage, in which every task folds its valid rows into one
+    * [[HourlyStats]] per hour. The driver keeps the open hours, as the
+    * reference keeps its single in-memory dict (consumer/consumer.py:
+    * 81-98, 240-293), merges the partials into them, derives the 16
+    * metrics of each updated hour exactly as [[hourlyMetrics]] does, merges
+    * those rows into the driver-held table of every hour the sink holds,
+    * and publishes the whole table as the next generation: one parquet
+    * file written from the driver, then named in the sink's generation log
+    * (`_generations`, Spark's own versioned metadata log). Merging keeps
+    * the sink's last-write-wins order, `(batch_epoch, updated_at)`: only
+    * the updated hours get the batch's stamps, carried-over hours keep
+    * theirs. A batch with no valid on-time rows publishes nothing. The log
+    * refuses a generation id that already exists, so a writer that lost a
+    * race to a concurrent publish (a backfill) reloads the table, merges
+    * again and publishes the next id. After each publish, generations
+    * older than the last `spark.sql.streaming.minBatchesToRetain` (default
+    * 100, the bound the checkpoint's own logs keep) are purged with their
+    * files, so the sink holds a bounded number of files however long the
+    * stream runs; a reader fails only if it outlives that many publishes.
     *
-    * The aggregate keeps its state in ONE state store: its key is the
-    * hour and the 24 h watermark bounds the open hours to a few dozen
-    * rows, as the reference's single in-memory dict is (consumer/
-    * consumer.py:81-98), so more partitions would only add stores to
-    * commit and tasks to schedule per batch.
-    * `spark.sql.shuffle.partitions` is set to 1 only while the
-    * query starts (the query clones the session then, and its first
-    * batch records the count in the offset log, so a restart keeps the
-    * count its checkpoint recorded), and the caller's value is put back,
-    * or unset if the caller had none. The query runs on the caller's
-    * session, so listeners on `spark.streams` see it; another thread
-    * planning on the same session while `start` runs would see the
-    * count of 1.
+    * Late input follows the rule of Spark's stateful aggregate: the
+    * batch's watermark is the `batchWatermarkMs` Spark checkpointed in the
+    * batch's offset-log entry (the latest valid event time of the earlier
+    * batches minus 24 h), and an hour whose end is at or below it is
+    * closed: its rows in this batch are dropped and its sets are let go.
+    * The open hours travel with each generation in a sidecar,
+    * `_<data file>.open`, that records the query, the batch, the open
+    * hours before the batch and the batch's own partials. A restart
+    * reloads them from the live generation, and a replayed batch (its
+    * publish landed, its commit did not) merges again onto the hours
+    * before it, so it publishes the same table. A checkpoint that holds a
+    * state store was written by the earlier, stateful form of this query:
+    * its open hours are not in any sidecar, so `start` refuses it rather
+    * than undercount them.
     *
     * A batch starts no child process. With no libhadoop on the
     * classpath, Hadoop's local file system forks `chmod` for every file
@@ -258,13 +265,13 @@ object EventsPipeline {
     * [[ForkFreeFs]]'s checkpoint manager on the caller's session and
     * leaves it set (the file source opens its log later, on the stream
     * thread, from this session; a manager the caller chose is kept); the
-    * generation log writes through it, and the generation file through
-    * its local file system. The session's cached file system still
-    * forks: catalog table writes and the dead-letter file sink's data
-    * files go through it.
+    * generation log writes through it, and the generation file and its
+    * sidecar through its local file system. The session's cached file
+    * system still forks: catalog table writes and the dead-letter file
+    * sink's data files go through it.
     *
-    * Returns the aggregate query; call `processAllAvailable()`/`stop()`
-    * or awaitTermination on it.
+    * Returns the query; call `processAllAvailable()`/`stop()` or
+    * awaitTermination on it.
     */
   def start(
       spark: SparkSession,
@@ -283,27 +290,159 @@ object EventsPipeline {
       count(when(col("reason") === "valid", 1)).as("valid_events"),
       count(when(col("reason") =!= "valid", 1)).as("invalid_events"))
 
-    val agg = hourlyMetrics(
-      rawEvents(validated).withWatermark("event_time", "24 hours"))
-
     ForkFreeFs.install(spark)
-    val partitions = SQLConf.SHUFFLE_PARTITIONS.key
-    val callers = spark.conf.getAll.get(partitions)
-    spark.conf.set(partitions, 1L)
-    try agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$checkpointDir/agg")
+    val agg = new Path(checkpointDir, "agg")
+    val state = new Path(agg, "state")
+    if (state.getFileSystem(spark.sessionState.newHadoopConfWithOptions(ForkFreeFs.options))
+        .exists(state))
+      throw new IllegalStateException(s"checkpoint $agg holds a state store: it was written " +
+        "by the stateful form of the hourly query, whose open hours this query cannot " +
+        "read, so resuming it would undercount them. Start from a new checkpoint " +
+        "directory; the stream then reads every input file again.")
+    lazy val offsets = new OffsetSeqLog(spark, new Path(agg, "offsets").toString)
+    // the watermark stays on the valid rows, where the stateful form had
+    // it: an invalid line's parseable time never moves it
+    rawEvents(validated).withWatermark("event_time", "24 hours").writeStream
+      .option("checkpointLocation", agg.toString)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val rows = collectRows(batch)
-        if (rows.nonEmpty) publish(batch.sparkSession, sinkPath(outDir), rows.toSeq, _ => epoch)
+        val partials = foldHours(batch)
+        if (partials.nonEmpty) {
+          val session = batch.sparkSession
+          val watermark = offsets.offsetSeqMetadataForBatchId(epoch)
+            .fold(0L)(_.batchWatermarkMs) * 1000L
+          val updates = partials.filter { case (h, _) => h + HourMicros > watermark }
+          val query = session.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+          if (updates.nonEmpty) publish(session, sinkPath(outDir), _ => epoch) { live =>
+            val open = live.open.filter(_.query == query) match {
+              case Some(o) if o.epoch < epoch => o.after
+              case Some(o) if o.epoch == epoch => o.before
+              case Some(o) => throw new IllegalStateException(
+                s"${sinkPath(outDir)} holds the open hours of batch ${o.epoch}, after batch $epoch")
+              case None => Map.empty[Long, HourlyStats]
+            }
+            val next = OpenHours(query, epoch,
+              open.filter { case (h, _) => h + HourMicros > watermark }, updates)
+            (updates.keys.toSeq.map(h => metricsRow(session, h, next.after(h))), Some(next))
+          }
+        }
         ()
       }
       .start()
-    finally callers match {
-      case Some(v) => spark.conf.set(partitions, v)
-      case None => spark.conf.unset(partitions)
+  }
+
+  /** One hour of the open aggregate: the reference's `HourlyStats`
+    * (consumer/consumer.py:81-98) with exact decimal sums. `customers` and
+    * `sessions` are the hour's distinct `customer_id`s and login
+    * `session_id`s. */
+  private[streaming] final case class HourlyStats(
+      tariffSwitches: Long = 0L,
+      switchRevenue: JBigDecimal = JBigDecimal.ZERO,
+      greenSwitches: Long = 0L,
+      incentiveClaims: Long = 0L,
+      incentivePayouts: JBigDecimal = JBigDecimal.ZERO,
+      logins: Long = 0L,
+      payments: Long = 0L,
+      paid: JBigDecimal = JBigDecimal.ZERO,
+      energy: JBigDecimal = JBigDecimal.ZERO,
+      peak: Option[JBigDecimal] = None,
+      customers: Set[String] = Set.empty,
+      sessions: Set[Int] = Set.empty) {
+
+    /** This hour with one more valid event; a null amount adds nothing,
+      * as `sum` and `max` skip nulls. */
+    def add(eventType: String, customer: String, session: Option[Int], tariff: String,
+        payment: JBigDecimal, kwh: JBigDecimal): HourlyStats = {
+      def plus(a: JBigDecimal, b: JBigDecimal) = if (b == null) a else a.add(b)
+      val seen = if (customer == null) this else copy(customers = customers + customer)
+      eventType match {
+        case "tariff_switch" => seen.copy(tariffSwitches = tariffSwitches + 1,
+          switchRevenue = plus(switchRevenue, payment),
+          greenSwitches = greenSwitches + (if (tariff == "green") 1 else 0))
+        case "incentive_claim" => seen.copy(incentiveClaims = incentiveClaims + 1,
+          incentivePayouts = plus(incentivePayouts, payment))
+        case "user_login" => seen.copy(logins = logins + 1, sessions = sessions ++ session)
+        case "bill_payment" => seen.copy(payments = payments + 1, paid = plus(paid, payment))
+        case "energy_consumed" => seen.copy(energy = plus(energy, kwh),
+          peak = (peak ++ Option(kwh)).maxOption)
+        case _ => seen
+      }
     }
+
+    def merge(o: HourlyStats): HourlyStats = HourlyStats(
+      tariffSwitches + o.tariffSwitches, switchRevenue.add(o.switchRevenue),
+      greenSwitches + o.greenSwitches, incentiveClaims + o.incentiveClaims,
+      incentivePayouts.add(o.incentivePayouts), logins + o.logins, payments + o.payments,
+      paid.add(o.paid), energy.add(o.energy), (peak ++ o.peak).maxOption,
+      customers ++ o.customers, sessions ++ o.sessions)
+  }
+
+  private def mergeHours(a: Map[Long, HourlyStats], b: Map[Long, HourlyStats]): Map[Long, HourlyStats] =
+    b.foldLeft(a) { case (m, (h, s)) => m.updated(h, m.get(h).fold(s)(_.merge(s))) }
+
+  private val HourMicros = 3600L * 1000L * 1000L
+
+  /** The open hours a generation carries: those of `query` before its
+    * batch `epoch` (the closed ones dropped) and that batch's partials. */
+  private[streaming] final case class OpenHours(query: String, epoch: Long,
+      before: Map[Long, HourlyStats], batch: Map[Long, HourlyStats]) {
+    @transient lazy val after: Map[Long, HourlyStats] = mergeHours(before, batch)
+  }
+
+  /** The batch's valid events folded into one [[HourlyStats]] per hour
+    * (the `window(event_time, "1 hour")` start, in microseconds): one job
+    * of one stage, no aggregate, no Exchange. */
+  private def foldHours(batch: DataFrame): Map[Long, HourlyStats] = {
+    val schema = batch.schema
+    val Seq(customer, eventType, time, kwh, payment, session, tariff) = Seq("customer_id",
+      "event_type", "event_time", "energy_consumed", "payment_amount", "session_id",
+      "tariff_type").map(schema.fieldIndex)
+    val Seq(kwhType, paymentType) = Seq(kwh, payment).map(schema(_).dataType.asInstanceOf[DecimalType])
+    def text(r: InternalRow, i: Int): String = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    def amount(r: InternalRow, i: Int, t: DecimalType): JBigDecimal =
+      if (r.isNullAt(i)) null else r.getDecimal(i, t.precision, t.scale).toJavaBigDecimal
+    batch.queryExecution.toRdd.mapPartitions { rows =>
+      Iterator(rows.foldLeft(Map.empty[Long, HourlyStats]) { (hours, r) =>
+        val t = r.getLong(time)
+        val hour = t - Math.floorMod(t, HourMicros)
+        hours.updated(hour, hours.getOrElse(hour, HourlyStats()).add(text(r, eventType),
+          text(r, customer), if (r.isNullAt(session)) None else Some(r.getInt(session)),
+          text(r, tariff), amount(r, payment, paymentType), amount(r, kwh, kwhType)))
+      })
+    }.collect().foldLeft(Map.empty[Long, HourlyStats])(mergeHours)
+  }
+
+  /** The [[hourlyMetrics]] row of one hour, from its [[HourlyStats]]:
+    * the same types, and the same arithmetic (a decimal sum cast to
+    * double, divided by a count cast to double). */
+  private def metricsRow(spark: SparkSession, hour: Long, s: HourlyStats): InternalRow = {
+    val fields = sinkSchema(spark).fields.dropRight(2)
+    def dec(name: String, v: JBigDecimal): Decimal = fields.find(_.name == name).get.dataType match {
+      case t: DecimalType => Decimal(v, t.precision, t.scale)
+    }
+    def avg(total: Decimal, n: Long): Double = if (n > 0) total.toDouble / n.toDouble else 0.0
+    val revenue = dec("total_switch_revenue", s.switchRevenue)
+    val paid = dec("total_payments", s.paid)
+    val energy = dec("total_energy_consumed", s.energy)
+    val customers = s.customers.size.toLong
+    val values = Map[String, Any](
+      "hour" -> hour,
+      "tariff_switches" -> s.tariffSwitches,
+      "total_switch_revenue" -> revenue,
+      "green_tariff_switches" -> s.greenSwitches,
+      "incentive_claims" -> s.incentiveClaims,
+      "total_incentive_payouts" -> dec("total_incentive_payouts", s.incentivePayouts),
+      "total_logins" -> s.logins,
+      "new_sessions" -> s.sessions.size.toLong,
+      "payment_events" -> s.payments,
+      "total_payments" -> paid,
+      "total_energy_consumed" -> energy,
+      "peak_hour_usage" -> s.peak.map(dec("peak_hour_usage", _)).orNull,
+      "active_customers" -> customers,
+      "avg_switch_value" -> avg(revenue, s.tariffSwitches),
+      "avg_consumption_per_customer" -> avg(energy, customers),
+      "avg_payment_amount" -> avg(paid, s.payments))
+    InternalRow.fromSeq(fields.map(f => values(f.name)).toSeq)
   }
 
   /** Dead-letter sink as its own query (shares the source). */
@@ -403,20 +542,22 @@ object EventsPipeline {
   private val sinkSchemaOnce =
     new java.util.concurrent.atomic.AtomicReference[StructType]()
 
-  /** A frame's rows on the driver, as Spark's internal rows: the one job
-    * a flush runs. */
+  /** A frame's rows on the driver, as Spark's internal rows, in one job. */
   private def collectRows(df: DataFrame): Array[InternalRow] =
     df.queryExecution.toRdd.map(_.copy()).collect()
 
   /** The live table of one sink as last published or loaded here: its
-    * generation (-1: none yet), the file that generation names, and each
-    * hour's row in the sink's schema, by `hour` in microseconds. */
-  private final case class LiveTable(gen: Long, file: String, rows: Map[Long, InternalRow])
+    * generation (-1: none yet), the file that generation names, each
+    * hour's row in the sink's schema, by `hour` in microseconds, and the
+    * open hours its sidecar carries. */
+  private[streaming] final case class LiveTable(gen: Long, file: String, rows: Map[Long, InternalRow],
+      open: Option[OpenHours])
 
   /** The live table of every sink this JVM has published to, by
     * qualified sink path; checked against the generation log's latest
-    * entry before each use. */
-  private val liveTables = new ConcurrentHashMap[String, LiveTable]()
+    * entry before each use. A spec clears it to restart as a new JVM
+    * would. */
+  private[streaming] val liveTables = new ConcurrentHashMap[String, LiveTable]()
 
   /** Called with the sink path after a generation file is in place and
     * before its log entry is added; a test sets it to publish
@@ -435,15 +576,16 @@ object EventsPipeline {
     }
   }
 
-  /** Publish `updates` (rows of [[hourlyMetrics]]) to the sink at `sink`:
-    * merge them into its live table, stamped with
+  /** Publish to the sink at `sink`: `next(live table)` gives the rows of
+    * [[hourlyMetrics]] to merge into its live table, stamped with
     * `epochOf(the table's largest epoch, -1 if none)` and the time of
-    * the merge, write the whole table as the next generation's file and
-    * add that generation to the log. A refused add (another writer
-    * published that id first) deletes the file, and the merge is made
-    * again over the newer table. Returns the epoch stamped. */
-  private def publish(spark: SparkSession, sink: String, updates: Seq[InternalRow],
-      epochOf: Long => Long): Long = {
+    * the merge, and the open hours the new generation carries. Write the
+    * whole table as the next generation's file, the open hours as its
+    * sidecar, and add that generation to the log. A refused add (another
+    * writer published that id first) deletes both files, and the merge is
+    * made again over the newer table. Returns the epoch stamped. */
+  private def publish(spark: SparkSession, sink: String, epochOf: Long => Long)(
+      next: LiveTable => (Seq[InternalRow], Option[OpenHours])): Long = {
     val dir = new Path(sink)
     val conf = spark.sessionState.newHadoopConfWithOptions(ForkFreeFs.options)
     val fs = dir.getFileSystem(conf)
@@ -455,10 +597,12 @@ object EventsPipeline {
       val live = log.getLatest() match {
         case Some((gen, file)) =>
           Option(liveTables.get(key)).filter(t => t.gen == gen && t.file == file)
-            .getOrElse(LiveTable(gen, file, load(spark, Seq(new Path(dir, file)))))
+            .getOrElse(LiveTable(gen, file, load(spark, Seq(new Path(dir, file))),
+              readOpen(fs, dir, file)))
         case None => // a sink written before the log existed, or a new one
-          LiveTable(-1L, "", load(spark, dataFiles(fs, dir).filter(generationOf(_).isEmpty)))
+          LiveTable(-1L, "", load(spark, dataFiles(fs, dir).filter(generationOf(_).isEmpty)), None)
       }
+      val (updates, open) = next(live)
       val epoch = epochOf(live.rows.valuesIterator.map(r => r.getLong(r.numFields - 2))
         .maxOption.getOrElse(-1L))
       val now = ChronoUnit.MICROS.between(Instant.EPOCH, Instant.now)
@@ -467,17 +611,17 @@ object EventsPipeline {
       }
       val gen = live.gen + 1
       val file = writeGeneration(spark, conf, fs, dir, gen, rows)
+      open.foreach(writeOpen(fs, dir, file, _))
       beforeAdd.get()(sink)
       val added = try log.add(gen, file)
         catch { case _: java.util.ConcurrentModificationException => false }
-      if (!added) fs.delete(new Path(dir, file), false)
+      if (!added) drop(fs, new Path(dir, file))
       else {
-        liveTables.put(key, LiveTable(gen, file, rows))
+        liveTables.put(key, LiveTable(gen, file, rows, open))
         val oldest = gen - spark.sessionState.conf.minBatchesToRetain + 1
         if (oldest > 0) {
           log.purge(oldest)
-          dataFiles(fs, dir).filter(generationOf(_).exists(_ < oldest))
-            .foreach(fs.delete(_, false))
+          dataFiles(fs, dir).filter(generationOf(_).exists(_ < oldest)).foreach(drop(fs, _))
         }
         published = Some(epoch)
       }
@@ -490,6 +634,31 @@ object EventsPipeline {
     if (files.isEmpty) Map.empty
     else collectRows(spark.read.schema(sinkSchema(spark)).parquet(files.map(_.toString): _*))
       .foldLeft(Map.empty[Long, InternalRow])(newest)
+
+  /** The sidecar of data file `file`: `_` keeps it out of Spark's file
+    * index. */
+  private def sidecar(dir: Path, file: String): Path = new Path(dir, s"_$file.open")
+
+  private def writeOpen(fs: FileSystem, dir: Path, file: String, open: OpenHours): Unit = {
+    val out = new java.io.ObjectOutputStream(
+      new java.io.BufferedOutputStream(fs.create(sidecar(dir, file), false)))
+    try out.writeObject(open) finally out.close()
+  }
+
+  private def readOpen(fs: FileSystem, dir: Path, file: String): Option[OpenHours] = {
+    val p = sidecar(dir, file)
+    if (!fs.exists(p)) None
+    else {
+      val in = new java.io.ObjectInputStream(new java.io.BufferedInputStream(fs.open(p)))
+      try Some(in.readObject().asInstanceOf[OpenHours]) finally in.close()
+    }
+  }
+
+  /** Delete a data file and its sidecar. */
+  private def drop(fs: FileSystem, file: Path): Unit = {
+    fs.delete(file, false)
+    fs.delete(sidecar(file.getParent, file.getName), false)
+  }
 
   /** The top-level data files of a sink: files whose names Spark's file
     * index does not skip. */
@@ -560,7 +729,7 @@ object EventsPipeline {
     val repaired = batchHourlyMetrics(spark, inputDir)
       .filter(col("hour") >= from && col("hour") < to)
     ForkFreeFs.install(spark)
-    publish(spark, sinkPath(outDir), collectRows(repaired), _ + 1)
+    publish(spark, sinkPath(outDir), _ + 1)(live => (collectRows(repaired), live.open))
   }
 
   /** Robust anomaly audit OVER THE STREAMING SINK: the oracle-checked
@@ -597,12 +766,12 @@ object EventsPipeline {
     if (fs.exists(dir)) {
       ForkFreeFs.install(spark)
       val log = new HDFSMetadataLog[String](spark, new Path(dir, GenerationLog).toString)
-      if (log.getLatest().isEmpty) publish(spark, sink, Nil, identity)
+      if (log.getLatest().isEmpty) publish(spark, sink, identity)(live => (Nil, live.open))
       val (gen, live) = log.getLatest().get
       log.purge(gen)
       dataFiles(fs, dir)
         .filter(p => p.getName != live && !generationOf(p).exists(_ > gen))
-        .foreach(fs.delete(_, false))
+        .foreach(drop(fs, _))
     }
   }
 }

@@ -23,19 +23,22 @@ object SparkTestSession {
     // made a full green `sbt test` run exit dirty. This hook runs
     // FIRST (higher Hadoop priority): stop any streaming query a spec
     // leaked, wait for in-flight jobs to drain (bounded), give the
-    // local endpoint a beat to deliver the final status updates, then
-    // stop the session cleanly so Spark's own hook finds the context
-    // already stopped.
+    // local endpoint a beat to deliver the final status updates if a
+    // job was still running, then stop the session cleanly so Spark's
+    // own hook finds the context already stopped.
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
       new Runnable {
         override def run(): Unit = try {
           s.streams.active.foreach(q =>
             try q.stop() catch { case _: Throwable => () })
           val deadline = System.currentTimeMillis() + 20000L
+          var drained = false
           while (s.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
-              System.currentTimeMillis() < deadline)
+              System.currentTimeMillis() < deadline) {
+            drained = true
             Thread.sleep(50L)
-          Thread.sleep(200L)
+          }
+          if (drained) Thread.sleep(200L)
           s.stop()
         } catch { case _: Throwable => () }
       }, 60, 30L, java.util.concurrent.TimeUnit.SECONDS)
